@@ -122,13 +122,36 @@ final class EsHttpFacade(
     if (asyncStarted) asyncSearcher.shutdown()
   }
 
-  /** Docs table over everything ingested so far. */
+  /** Docs table over everything ingested so far. The default path
+    * probes the sink on every call, so a write that finished before the
+    * request is visible, and reuses one resolved (unpinned) relation
+    * while the sink generation is unchanged: the listing, schema-merge
+    * job and relation resolution are paid once per generation, not per
+    * request. The mapping is applied per call, so hot-reload still
+    * applies. Every query still scans Parquet. */
   def table: DocsTable =
     if (serving) servingCore.engine.table
-    // mergeSchema: files written under successive mappings differ in
-    // columns; the table must carry their union (see ServingCore)
-    else DocsTable(spark.read.option("mergeSchema", "true").parquet(sinkDir),
-      currentMapping)
+    else DocsTable(sinkRelation(), currentMapping)
+
+  // (sink signature, its resolved relation): exactly one per facade
+  @volatile private var resolved: (Long, org.apache.spark.sql.DataFrame) = _
+  private val resolveLock = new Object
+
+  private def sinkRelation(): org.apache.spark.sql.DataFrame = {
+    val sig = SinkGeneration.signature(spark, sinkDir)
+    val hit = resolved
+    if (hit != null && hit._1 == sig) return hit._2
+    resolveLock.synchronized {
+      val again = resolved
+      if (again != null && again._1 == sig) again._2
+      else {
+        val df = SinkGeneration.open(spark, sinkDir)
+        mTableOpens.inc()
+        resolved = (sig, df)
+        df
+      }
+    }
+  }
 
   /** Serving-mode machinery (generation-cached engine, memoized plans,
     * response + page-prefix caches) — shared with [[grpc.GrpcSeqApi]]
@@ -141,7 +164,8 @@ final class EsHttpFacade(
     * table and plan cache (only meaningful with serving=true). */
   def core: ServingCore = servingCore
 
-  /** Engine for a read request: serving mode reuses the cached one. */
+  /** Engine for a read request: serving mode reuses the cached one;
+    * the default path builds one over [[table]]. */
   private def readEngine(): SeqEngine =
     if (serving) servingCore.engine else new SeqEngine(table)
 
@@ -206,6 +230,7 @@ final class EsHttpFacade(
   private val mSearchErrors   = metrics.counter("search_errors_total", "failed read requests")
   private val mRateLimited    = metrics.counter("rate_limited_total", "429-rejected requests")
   private val mBreakerOpen    = metrics.counter("breaker_open_total", "bulk requests shed by the open circuit")
+  private val mTableOpens     = metrics.counter("table_opens_total", "default-mode sink resolutions (one per sink generation)")
   private val mBulkSeconds    = metrics.histogram("bulk_duration_seconds")
   private val mSearchSeconds  = metrics.histogram("search_duration_seconds")
 

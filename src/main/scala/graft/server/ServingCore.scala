@@ -59,19 +59,14 @@ final class ServingCore(
   // same envelope the old 1000x256 config had
   private val PrefixRows = 5120
 
-  /** Cheap generation probe: top-level sink FS statuses (file/partition
-    * adds bump dir mtimes) folded with the mapping file's (len, mtime)
-    * when hot-reload is wired — re-checked at most once per second. */
+  /** Cheap generation probe: the shared sink signature
+    * ([[SinkGeneration.signature]]) folded with the mapping file's
+    * (len, mtime) when hot-reload is wired — re-checked at most once
+    * per second. */
   private def sinkSignature(): Long = {
     val now = System.currentTimeMillis()
     if (now - lastSigCheckMs < 1000 && engineCache != null) return lastSig
-    val p = new org.apache.hadoop.fs.Path(sinkDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val sinkSig =
-      if (!fs.exists(p)) 0L
-      else fs.listStatus(p).foldLeft(17L)((a, s) =>
-        a * 1000003L + s.getPath.getName.hashCode.toLong * 31L +
-          s.getLen * 7L + s.getModificationTime)
+    val sinkSig = SinkGeneration.signature(spark, sinkDir)
     val mapSig = mappingPath.fold(0L) { mp =>
       val f = new java.io.File(mp)
       if (!f.exists()) 0L else f.length() * 1000003L + f.lastModified()
@@ -144,11 +139,7 @@ final class ServingCore(
       // so a date-window predicate skips whole batches via their
       // min/max stats — without it the hash shuffle interleaves days
       // and every batch's stats span everything (no skipping)
-      // mergeSchema: an ingest sink ACCRETES fields over time (that is
-      // what mapping hot-reload is for) — without the union schema,
-      // Spark takes one file's footer at random and a column that only
-      // newer files carry silently disappears from the engine
-      val raw = spark.read.option("mergeSchema", "true").parquet(sinkDir)
+      val raw = SinkGeneration.open(spark, sinkDir)
       // Pin policy: MEMORY_AND_DISK caches the whole sink — right for
       // the log-store page-serving scale it was built for, an OOM risk
       // for a year-scale (100×) sink. Above `maxPinnedBytes` of

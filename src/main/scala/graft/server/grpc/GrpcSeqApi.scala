@@ -84,10 +84,12 @@ final class GrpcSeqApi(
   // default result retention when the request leaves it unset
   private val DefaultRetentionMs = 24L * 3600 * 1000
 
-  /** Per-call engine, or the serving core's generation-cached one
-    * (memory-pinned table, shared plan cache) when serving is wired —
-    * proto clients then get the same ~ms warm path as the HTTP facade
-    * instead of the ~130 ms cold-plan floor. */
+  /** Per-call engine over `table`, or the serving core's
+    * generation-cached one (memory-pinned table, shared plan cache) when
+    * serving is wired — proto clients then get the same ~ms warm path as
+    * the HTTP facade. Wired to the facade's by-name `table`, the per-call
+    * engine reuses the relation resolved for the current sink generation;
+    * each handler evaluates it once and passes it on. */
   private def engine =
     serving.map(_.engine).getOrElse(new SeqEngine(table))
 
@@ -362,15 +364,14 @@ final class GrpcSeqApi(
 
   // ---- method implementations --------------------------------------
 
-  private def collectDocs(df: org.apache.spark.sql.DataFrame): Seq[Doc] = {
-    val eng = engine
+  private def collectDocs(eng: SeqEngine,
+      df: org.apache.spark.sql.DataFrame): Seq[Doc] =
     eng.withIdString(df)
       .select(col("id"), col("mid"), col("_raw"))
       .collect()
       .map(r => Doc(r.getString(0),
         Option(r.getString(2)).getOrElse("").getBytes("UTF-8"), r.getLong(1)))
       .toSeq
-  }
 
   private def handleSearch(r: PSearchRequest): PSearchResponse = {
     admitQuery(r.q.query, Nil, "")
@@ -385,7 +386,7 @@ final class GrpcSeqApi(
         core.servingPage(req).map(row => Doc(row.getString(0),
           Option(row.getString(3)).getOrElse("").getBytes("UTF-8"),
           row.getLong(1))).toSeq
-      case None => collectDocs(eng.search(req))
+      case None => collectDocs(eng, eng.search(req))
     }
     val total =
       if (r.withTotal)
@@ -551,7 +552,7 @@ final class GrpcSeqApi(
       size = r.size.toInt, offset = r.offset.toInt, asc = r.asc)
     val t0 = System.nanoTime()
     val searchDf = if (r.size > 0) Some(eng.search(req)) else None
-    val docs = searchDf.map(collectDocs).getOrElse(Nil)
+    val docs = searchDf.map(collectDocs(eng, _)).getOrElse(Nil)
     val total =
       if (r.withTotal)
         eng.total(r.q.query, r.q.fromMs, r.q.toMs).collect()(0).getLong(0)
@@ -589,7 +590,7 @@ final class GrpcSeqApi(
           .getBytes("UTF-8"))
       case _ => identity
     }
-    collectDocs(eng.fetchByIds(r.ids)).foreach(d => obs.onNext(filter(d)))
+    collectDocs(eng, eng.fetchByIds(r.ids)).foreach(d => obs.onNext(filter(d)))
   }
 
   private def handleExport(r: PExportRequest, obs: StreamObserver[Doc]): Unit = {
@@ -679,6 +680,9 @@ final class GrpcSeqApi(
     val partial =
       if (r.withDocs || wantsAggs) asyncSearcher.fetchPartial(r.searchId)
       else None
+    // one engine for the docs page and the aggregations; a bare status
+    // poll never builds it
+    lazy val eng = engine
     val docs =
       if (!r.withDocs) Nil
       else partial match {
@@ -688,7 +692,7 @@ final class GrpcSeqApi(
           val ordered =
             if (asc) df.orderBy(col("mid").asc, col("rid").asc)
             else df.orderBy(col("mid").desc, col("rid").desc)
-          collectDocs(ordered.offset(r.offset).limit(size))
+          collectDocs(eng, ordered.offset(r.offset).limit(size))
       }
     // aggs/hist requested at start run over the PERSISTED partials at
     // fetch time (partial answer while running, full when done) — the
@@ -702,7 +706,6 @@ final class GrpcSeqApi(
           val cached = asyncAggCache.get(r.searchId)
           if (cached != null && cached._1 == gen) (cached._2, cached._3)
           else {
-            val eng = engine
             val as = req.aggs.map { a =>
               val out = eng.aggregateOver(df, toAggRequest(a))
               toProtoAgg(out.collect(), out.schema, a)

@@ -3,10 +3,15 @@ package graft.server
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.functions.{col, timestamp_millis, to_date}
+
 import graft.SparkSpec
+import graft.ingest.BulkIngest
 import graft.model.{IndexType, SeqMapping}
 
 class EsFacadeSpec extends SparkSpec {
+  import spark.implicits._
 
   private val mapping = SeqMapping.of(
     "service" -> IndexType.Keyword,
@@ -25,6 +30,58 @@ class EsFacadeSpec extends SparkSpec {
     client.send(HttpRequest.newBuilder(URI.create(s"http://127.0.0.1:${facade.port}$path"))
       .POST(HttpRequest.BodyPublishers.ofString(body)).build(),
       HttpResponse.BodyHandlers.ofString())
+
+  private def postTo(port: Int, path: String, body: String): HttpResponse[String] =
+    client.send(HttpRequest.newBuilder(URI.create(s"http://127.0.0.1:$port$path"))
+      .POST(HttpRequest.BodyPublishers.ofString(body)).build(),
+      HttpResponse.BodyHandlers.ofString())
+
+  private def searchTotal(port: Int, query: String): Int = {
+    val r = postTo(port, "/search",
+      s"""{"query":"$query","from":0,"to":${Long.MaxValue},"size":100}""")
+    assert(r.statusCode() == 200, r.body())
+    "\"total\":(\\d+)".r.findFirstMatchIn(r.body()).get.group(1).toInt
+  }
+
+  /** Stage names of the Spark jobs `body` launches, on any thread. The
+    * listener bus is asynchronous, so two marker jobs fence the window:
+    * only jobs whose start events arrive between the markers count. */
+  private def jobsOf(body: => Unit): Seq[String] = {
+    val sc = spark.sparkContext
+    val tag = s"jobs-fence-${System.nanoTime()}"
+    val events = new java.util.concurrent.LinkedBlockingQueue[Either[String, String]]()
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val desc = Option(e.properties).map(_.getProperty("spark.job.description")).orNull
+        if (desc != null && desc.startsWith(tag)) events.put(Left(desc))
+        else events.put(Right(e.stageInfos.map(_.name).mkString("+")))
+      }
+    }
+    def fence(name: String): Unit = {
+      sc.setJobDescription(s"$tag-$name")
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+    }
+    sc.addSparkListener(l)
+    try {
+      fence("start"); body; fence("end")
+      val out = Seq.newBuilder[String]
+      var inside = false
+      var done = false
+      while (!done) {
+        events.poll(30, java.util.concurrent.TimeUnit.SECONDS) match {
+          case null               => fail("listener fence never arrived")
+          case Left(d)            => if (d.endsWith("-start")) inside = true else done = true
+          case Right(n) if inside => out += n
+          case Right(_)           => ()
+        }
+      }
+      out.result()
+    } finally sc.removeSparkListener(l)
+  }
+
+  /** A sink-open job: the schema merge (or listing) that resolving the
+    * sink's `spark.read...parquet` launches. */
+  private def isSinkOpen(stage: String): Boolean = stage.startsWith("parquet at ")
 
   test("handshake stubs satisfy shipper probes") {
     facade.start()
@@ -282,5 +339,83 @@ class EsFacadeSpec extends SparkSpec {
       val f2 = post("/async_search/fetch", """{"id":"t2"}""")
       assert(f2.body().contains("\"status\":\"canceled\""))
     } finally facade.stop()
+  }
+
+  test("default mode: a root-level /_bulk append is visible to the next read") {
+    val sinkB = java.nio.file.Files.createTempDirectory("graft_es_fresh").toString + "/docs"
+    val fc = new EsHttpFacade(spark, mapping, sinkB)
+    val port = fc.start()
+    try {
+      val ts = java.time.Instant.now().toString
+      def bulk(msg: String): Unit = assert(postTo(port, "/_bulk",
+        s"""{"timestamp":"$ts","service":"api","level":"error","message":"$msg"}""" + "\n")
+        .statusCode() == 200)
+      bulk("first")
+      assert(searchTotal(port, "level:error") == 1)
+      // no sleep: the default path probes the sink on every request
+      bulk("second")
+      assert(searchTotal(port, "level:error") == 2)
+      bulk("third")
+      assert(searchTotal(port, "level:error") == 3)
+    } finally fc.stop()
+  }
+
+  test("default mode: a file appended into an existing date= partition is visible") {
+    val sinkP = java.nio.file.Files.createTempDirectory("graft_es_part").toString + "/docs"
+    val reqTime = 1710072000000L // 2024-03-10T12:00Z
+    BulkIngest.writePartitioned(BulkIngest.project(Seq(
+      """{"timestamp":"2024-03-10 09:00:00","service":"api","level":"error","message":"a"}""",
+      """{"timestamp":"2024-03-09 15:00:00","service":"api","level":"error","message":"b"}""",
+    ).toDF("value"), mapping, reqTime), sinkP)
+    val fc = new EsHttpFacade(spark, mapping, sinkP)
+    val port = fc.start()
+    try {
+      assert(searchTotal(port, "level:error") == 2)
+      // the day-partitioned append the streaming sink does
+      BulkIngest.project(Seq(
+          """{"timestamp":"2024-03-10 10:00:00","service":"db","level":"error","message":"c"}""")
+          .toDF("value"), mapping, reqTime)
+        .withColumn("date", to_date(timestamp_millis(col("mid"))))
+        .write.mode("append").partitionBy("date").parquet(sinkP)
+      assert(new java.io.File(sinkP, "date=2024-03-10").listFiles()
+        .count(_.getName.endsWith(".parquet")) == 2)
+      assert(searchTotal(port, "level:error") == 3)
+      assert(searchTotal(port, "service:db") == 1)
+    } finally fc.stop()
+  }
+
+  test("default mode: the sink is resolved once per generation and again after an append") {
+    val sinkR = java.nio.file.Files.createTempDirectory("graft_es_reuse").toString + "/docs"
+    val fc = new EsHttpFacade(spark, mapping, sinkR)
+    val port = fc.start()
+    try {
+      val ts = java.time.Instant.now().toString
+      def bulk(msg: String): Unit = assert(postTo(port, "/_bulk",
+        s"""{"timestamp":"$ts","service":"api","level":"error","message":"$msg"}""" + "\n")
+        .statusCode() == 200)
+      def opens(): Long = fc.metrics.counter("table_opens_total").value
+      bulk("first")
+      val first = jobsOf(assert(searchTotal(port, "level:error") == 1))
+      assert(first.exists(isSinkOpen), first)
+      assert(opens() == 1)
+      val df = fc.table.df
+      // unchanged sink: the same resolved relation, and the read runs
+      // only its own query's jobs
+      val second = jobsOf(assert(searchTotal(port, "level:error") == 1))
+      assert(!second.exists(isSinkOpen), second)
+      assert(second.nonEmpty && second == first.filterNot(isSinkOpen), (first, second))
+      assert(fc.table.df eq df)
+      assert(opens() == 1)
+      // an append moves the generation: resolved again, and visible
+      bulk("second")
+      val third = jobsOf(assert(searchTotal(port, "level:error") == 2))
+      assert(third.exists(isSinkOpen), third)
+      assert(!(fc.table.df eq df))
+      assert(opens() == 2)
+      val scrape = client.send(HttpRequest.newBuilder(
+          URI.create(s"http://127.0.0.1:$port/metrics")).GET().build(),
+        HttpResponse.BodyHandlers.ofString()).body()
+      assert(scrape.contains("seq_db_table_opens_total 2"), scrape)
+    } finally fc.stop()
   }
 }

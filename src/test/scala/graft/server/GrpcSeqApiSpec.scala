@@ -1,5 +1,7 @@
 package graft.server
 
+import org.apache.spark.sql.functions.{col, timestamp_millis, to_date}
+
 import graft.SparkSpec
 import graft.engine.DocsTable
 import graft.ingest.BulkIngest
@@ -472,5 +474,77 @@ class GrpcSeqApiSpec extends SparkSpec {
       // retention stays anchored at the ORIGINAL start time
       assert(far.expirationMs.exists(_ > System.currentTimeMillis()))
     } finally { client2.close(); api2.stop() }
+  }
+
+  /** A default-mode gRPC API over a facade's by-name `table`, the way a
+    * co-hosted server is wired. */
+  private def withDefaultApi(m: SeqMapping, sink: String)(
+      body: (EsHttpFacade, GrpcSeqClient) => Unit): Unit = {
+    val facade = new EsHttpFacade(spark, m, sink)
+    val api = new GrpcSeqApi(spark, facade.table,
+      java.nio.file.Files.createTempDirectory("grpc_fresh_async").toString,
+      metrics = facade.metrics)
+    val client = new GrpcSeqClient("127.0.0.1", api.start(), api)
+    try body(facade, client) finally { client.close(); api.stop() }
+  }
+
+  private def totalOf(client: GrpcSeqClient, query: String): Long =
+    client.search(PSearchRequest(SearchQuery(query, 0L, Long.MaxValue),
+      size = 100, offset = 0, withTotal = true, asc = false)).total
+
+  test("default mode: a file carrying a new column appears in the union schema") {
+    val sink = java.nio.file.Files.createTempDirectory("grpc_newcol").toString + "/docs"
+    BulkIngest.writePartitioned(
+      BulkIngest.project(lines.toDF("value"), mapping, reqTime), sink)
+    val wide = mapping.copy(fields = mapping.fields ++
+      SeqMapping.of("region" -> IndexType.Keyword).fields)
+    withDefaultApi(wide, sink) { (facade, client) =>
+      assert(totalOf(client, "level:error") == 2)
+      assert(!facade.table.df.columns.contains("region"))
+      BulkIngest.project(Seq(
+          """{"timestamp":"2024-03-10 11:30:00","level":"error","message":"eu down","region":"eu"}""")
+          .toDF("value"), wide, reqTime)
+        .withColumn("date", to_date(timestamp_millis(col("mid"))))
+        .write.mode("append").partitionBy("date").parquet(sink)
+      assert(facade.table.df.columns.contains("region"))
+      assert(totalOf(client, "region:eu") == 1)
+      assert(totalOf(client, "level:error") == 3)
+    }
+  }
+
+  test("default mode: a deleted date= partition neither fails the next read nor still counts") {
+    val sink = java.nio.file.Files.createTempDirectory("grpc_dropday").toString + "/docs"
+    BulkIngest.writePartitioned(BulkIngest.project((lines :+
+        """{"timestamp":"2024-03-09 15:00:00","level":"error","message":"old day"}""")
+      .toDF("value"), mapping, reqTime), sink)
+    withDefaultApi(mapping, sink) { (facade, client) =>
+      assert(totalOf(client, "level:error") == 3)
+      val day = java.nio.file.Paths.get(sink, "date=2024-03-09")
+      assert(java.nio.file.Files.isDirectory(day))
+      java.nio.file.Files.walk(day).sorted(java.util.Comparator.reverseOrder())
+        .forEach(p => java.nio.file.Files.delete(p))
+      assert(totalOf(client, "level:error") == 2)
+      assert(totalOf(client, "message:old") == 0)
+    }
+  }
+
+  test("default mode: gRPC handlers reuse the facade's resolved table while the sink is unchanged") {
+    val sink = java.nio.file.Files.createTempDirectory("grpc_reuse").toString + "/docs"
+    BulkIngest.writePartitioned(
+      BulkIngest.project(lines.toDF("value"), mapping, reqTime), sink)
+    withDefaultApi(mapping, sink) { (facade, client) =>
+      def opens(): Long = facade.metrics.counter("table_opens_total").value
+      val q = SearchQuery("level:error", 0L, Long.MaxValue)
+      val ids = client.search(PSearchRequest(q, size = 10, offset = 0,
+        withTotal = true, asc = false)).docs.map(_.id)
+      assert(ids.size == 2)
+      val df = facade.table.df
+      assert(client.complexSearch(PComplexSearchRequest(q, size = 10, offset = 0,
+        withTotal = true, asc = false, aggs = Nil, histInterval = None)).docs.size == 2)
+      assert(client.fetch(PFetchRequest(ids)).map(_.id) == ids)
+      assert(client.getHistogram(PGetHistogramRequest(q, "1h")).hist.buckets.size == 2)
+      assert(facade.table.df eq df)
+      assert(opens() == 1)
+    }
   }
 }

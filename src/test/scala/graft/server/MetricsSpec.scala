@@ -82,6 +82,9 @@ class MetricsSpec extends SparkSpec {
         HttpResponse.BodyHandlers.ofString()).body()
       assert(text.contains("seq_db_grpc_requests_total 1"), text)
       assert(text.contains("seq_db_grpc_request_duration_seconds_count 1"), text)
+      // the gRPC Search resolved the sink through the facade's by-name
+      // table: one open for the one sink generation it saw
+      assert(text.contains("seq_db_table_opens_total 1"), text)
     } finally srv.stop()
   }
 }
