@@ -13,36 +13,6 @@ import graft.engine.{AggFunc, AggRequest, ChunkedAsyncSearcher, DocsTable, Searc
 import graft.ingest.BulkIngest
 import graft.model.SeqMapping
 
-/** ES-compatible HTTP facade (SURVEY.md §2.1 S2): the endpoints the
-  * reference's ingestor serves so logstash/filebeat/file.d can ship to
-  * it (proxyapi/http_server.go:61-90):
-  *
-  *   - `POST /_bulk` — NDJSON ingest (gzip supported,
-  *     proxyapi/http_bulk.go:112); action lines are stripped, documents
-  *     are stamped/projected/tokenized per the mapping and appended to
-  *     the parquet sink.
-  *   - `/_ilm/policy*`, `/_index_template*`, `/_ingest*`, `/_nodes*` —
-  *     `{}` fakes for Filebeat/Logstash setup probes.
-  *   - `GET /` — cluster handshake (HEAD = empty logstash ping);
-  *     `GET /_license` — basic license blob.
-  *   - `POST /search` — where the reference forwards to its gRPC
-  *     gateway, the facade exposes the engine's search as JSON
-  *     ({query, from, to, size, offset, asc} → rows of (id, mid, rid,
-  *     _raw)) so the whole read path is reachable over HTTP too.
-  *
-  * The facade is deliberately thin: one process-wide handler delegating
-  * to [[BulkIngest]] and [[SeqEngine]]; durability and layout come from
-  * the parquet sink, not from the server.
-  */
-/** @param serving serving mode for low-latency point queries: the docs
-  *   table + engine are built once per sink generation (not per
-  *   request), compiled request plans are memoized so a repeated query
-  *   re-executes a ready physical plan instead of re-parsing /
-  *   re-analyzing, and the table is pinned in executor memory. Sink
-  *   appends are picked up via a directory signature re-checked at
-  *   most once per second — bounded staleness matching the near-real-
-  *   time visibility contract ingestion already has.
-  */
 /** Request admission limits (docs/en/08-rate-limiting.md,
   * network/ratelimiter.go, storeapi/grpc_search.go:71-77 analogue):
   * `maxInflight` concurrent requests (0 = unlimited) and a
@@ -70,6 +40,36 @@ final case class RateLimits(
     perFetchIdRps: Double = 0.0,
     perFetchIdBurst: Int = 1)
 
+/** ES-compatible HTTP facade (SURVEY.md §2.1 S2): the endpoints the
+  * reference's ingestor serves so logstash/filebeat/file.d can ship to
+  * it (proxyapi/http_server.go:61-90):
+  *
+  *   - `POST /_bulk` — NDJSON ingest (gzip supported,
+  *     proxyapi/http_bulk.go:112); action lines are stripped, documents
+  *     are stamped/projected/tokenized per the mapping and appended to
+  *     the parquet sink.
+  *   - `/_ilm/policy*`, `/_index_template*`, `/_ingest*`, `/_nodes*` —
+  *     `{}` fakes for Filebeat/Logstash setup probes.
+  *   - `GET /` — cluster handshake (HEAD = empty logstash ping);
+  *     `GET /_license` — basic license blob.
+  *   - `POST /search` — where the reference forwards to its gRPC
+  *     gateway, the facade exposes the engine's search as JSON
+  *     ({query, from, to, size, offset, asc} → rows of (id, mid, rid,
+  *     _raw)) so the whole read path is reachable over HTTP too.
+  *
+  * The facade is deliberately thin: one process-wide handler delegating
+  * to [[BulkIngest]] and [[SeqEngine]]; durability and layout come from
+  * the parquet sink, not from the server.
+  *
+  * @param serving serving mode for low-latency point queries: the docs
+  *   table + engine are built once per sink generation (not per
+  *   request), compiled request plans are memoized so a repeated query
+  *   re-executes a ready physical plan instead of re-parsing /
+  *   re-analyzing, and the table is pinned in executor memory. Sink
+  *   appends are picked up via a directory signature re-checked at
+  *   most once per second — bounded staleness matching the near-real-
+  *   time visibility contract ingestion already has.
+  */
 final class EsHttpFacade(
     spark: SparkSession,
     mapping: SeqMapping,
@@ -236,24 +236,8 @@ final class EsHttpFacade(
 
   // ---- admission control -------------------------------------------
   private val inflight = new java.util.concurrent.atomic.AtomicInteger(0)
-  // token bucket: tokens scaled by 1e6 to stay integral; refilled by
-  // wall-clock elapsed at requestsPerSec, capped at burst
-  private val bucketTokens = new java.util.concurrent.atomic.AtomicLong(limits.burst * 1000000L)
-  @volatile private var bucketLastNs = System.nanoTime()
-
-  private def tryAdmitBucket(): Boolean = {
-    if (limits.requestsPerSec <= 0) return true
-    synchronized {
-      val now = System.nanoTime()
-      val refill = ((now - bucketLastNs) / 1e9 * limits.requestsPerSec * 1000000L).toLong
-      if (refill > 0) {
-        bucketLastNs = now
-        bucketTokens.set(math.min(limits.burst * 1000000L, bucketTokens.get() + refill))
-      }
-      if (bucketTokens.get() >= 1000000L) { bucketTokens.addAndGet(-1000000L); true }
-      else false
-    }
-  }
+  // global token bucket: one shared key
+  private val requestLimiter = new KeyedRateLimiter(limits.requestsPerSec, limits.burst)
 
   // keyed per-identical-query throttle (same contract as the gRPC
   // path: key = query + aggs + interval, NOT the time range)
@@ -295,7 +279,7 @@ final class EsHttpFacade(
           reply(ex, 429, """{"error":"too many inflight requests"}""")
           return
         }
-        if (!tryAdmitBucket()) {
+        if (!requestLimiter.tryAcquire("")) {
           if (limits.maxInflight > 0) inflight.decrementAndGet()
           mRateLimited.inc()
           ex.getResponseHeaders.set("Retry-After", "1")
@@ -422,28 +406,20 @@ final class EsHttpFacade(
       val raw = body(ex)
       val req = parseSearch(raw)
       if (!admitQueryKey(ex, s"search|${req.query}")) return
-      // capture the generation the response will be computed against;
-      // a concurrent rebuild keys our put() under the old generation,
-      // so the stale response is never served past the rebuild
-      val gen = if (serving) {
-        servingCore.cachedResponse(raw) match {
-          case Some(hit) => reply(ex, 200, hit); return
-          case None      => servingCore.generation()
-        }
-      } else 0L
-      val page =
-        if (serving) servingCore.servingPage(req)
+      def render(page: Array[org.apache.spark.sql.Row]): String = {
+        val hits = page.map { r =>
+          s"""{"id":${quote(r.getString(0))},"mid":${r.getLong(1)},"rid":${r.getLong(2)},"doc":${quote(r.getString(3))}}"""
+        }.mkString(",")
+        s"""{"total":${page.length},"hits":[$hits]}"""
+      }
+      val resp =
+        if (serving) servingCore.memo("http|" + raw)(render(servingCore.servingPage(req)))
         else {
           val eng = readEngine()
-          eng.withIdString(eng.search(req))
+          render(eng.withIdString(eng.search(req))
             .select(col("id"), col("mid"), col("rid"), col("_raw"))
-            .collect()
+            .collect())
         }
-      val hits = page.map { r =>
-        s"""{"id":${quote(r.getString(0))},"mid":${r.getLong(1)},"rid":${r.getLong(2)},"doc":${quote(r.getString(3))}}"""
-      }.mkString(",")
-      val resp = s"""{"total":${page.length},"hits":[$hits]}"""
-      if (serving) servingCore.putResponse(gen, raw, resp)
       reply(ex, 200, resp)
     }
 

@@ -15,12 +15,13 @@ package graft.server
   * trivially atomic). The map self-bounds by dropping refilled-to-full
   * (idle) entries, amortized to at most one sweep per second so a
   * unique-key flood cannot turn admission into an O(keys) scan per
-  * request. ratePerSec <= 0 disables the limiter entirely.
+  * request. ratePerSec <= 0 disables the limiter entirely. The servers'
+  * global request bucket is one of these used with a single key.
   */
 final class KeyedRateLimiter(ratePerSec: Double, burst: Int, maxKeys: Int = 4096) {
 
   private final class Bucket {
-    var micros: Long = burst * 1000000L // tokens scaled 1e6, like the global bucket
+    var micros: Long = burst * 1000000L // tokens scaled 1e6 to stay integral
     var lastNs: Long = System.nanoTime()
   }
 

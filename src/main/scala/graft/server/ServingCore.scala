@@ -1,13 +1,26 @@
 package graft.server
 
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 import graft.engine.{DocsTable, SearchRequest, SeqEngine}
 import graft.model.SeqMapping
 
 /** Serving-mode machinery shared by the HTTP facade and the gRPC API:
-  * a generation-cached engine over a memory-pinned docs table, memoized
-  * request plans, a response cache, and the incremental top-page scan.
+  * an engine over a memory-pinned docs table, plus the incremental
+  * top-page scan, all owned by one immutable sink generation.
+  *
+  * A generation is (signature, engine, date partitions, page-prefix
+  * cache, memo). The page-prefix cache is the scroll-context analogue:
+  * a query's top [[ServingCore.PrefixRows]] matches are collected once
+  * and every page of it slices that driver-held prefix. The memo holds
+  * request plans, rendered HTTP `/search` bodies and gRPC responses
+  * under kind-prefixed keys (the ES shard request cache, invalidated on
+  * refresh). Each request captures the generation once and reads only
+  * that value; a rebuild swaps in a fresh one. A build that loses the
+  * race with a rebuild writes into the old generation's caches, which
+  * nothing can reach any more, so a pre-append result is never served
+  * after the swap.
   *
   * Sink appends are picked up via a directory signature re-checked at
   * most once per second — bounded staleness matching the near-real-time
@@ -21,43 +34,18 @@ import graft.model.SeqMapping
   * mapping (and keeps probing), matching the reference's
   * log-and-keep-old behavior. One instance per (session, sink); both
   * servers of the same sink should share it so they also share the
-  * pinned table and plan cache.
+  * pinned table and caches.
   */
 final class ServingCore(
     spark: org.apache.spark.sql.SparkSession,
     mapping: SeqMapping,
     sinkDir: String,
     mappingPath: Option[String] = None) {
+  import ServingCore._
 
-  // (sinkSignature, engine, date partitions newest-first) — rebuilt
-  // when the sink generation moves
-  @volatile private var engineCache: (Long, SeqEngine, Seq[String]) = null
+  @volatile private var current: Generation = null
   @volatile private var lastSigCheckMs = 0L
   @volatile private var lastSig = 0L
-  // Every cache below keys by (generation, request-shape): an entry
-  // computed against generation G that loses the race with a rebuild to
-  // G+1 is inserted under G and simply never read again — clear() on
-  // rebuild bounds size, the generation key bounds STALENESS (a bare
-  // string key would let a slow in-flight build re-insert pre-append
-  // results after the rebuild cleared them).
-  private val planCache =
-    new java.util.concurrent.ConcurrentHashMap[(Long, String), org.apache.spark.sql.DataFrame]()
-  // ES-style request cache: identical request body → rendered response,
-  // invalidated with the engine (sink generation) like ES invalidates
-  // its shard request cache on refresh
-  private val responseCache =
-    new java.util.concurrent.ConcurrentHashMap[(Long, String), String]()
-  // per-query page-prefix cache (the scroll-context analogue): the top
-  // PrefixRows matches of a query are collected ONCE, and every
-  // subsequent page of the same query slices the driver-held prefix —
-  // pagination then costs memory slicing, not a Spark job per page
-  private val prefixCache =
-    new java.util.concurrent.ConcurrentHashMap[(Long, String), Array[org.apache.spark.sql.Row]]()
-  // sized to cover the reference's published paging scenario (k6
-  // seq-db-paging.js: 50 pages x 100 docs = offset 5000) from ONE
-  // prefix job; the cache cap below bounds total driver memory to the
-  // same envelope the old 1000x256 config had
-  private val PrefixRows = 5120
 
   /** Cheap generation probe: the shared sink signature
     * ([[SinkGeneration.signature]]) folded with the mapping file's
@@ -65,7 +53,7 @@ final class ServingCore(
     * per second. */
   private def sinkSignature(): Long = {
     val now = System.currentTimeMillis()
-    if (now - lastSigCheckMs < 1000 && engineCache != null) return lastSig
+    if (now - lastSigCheckMs < 1000 && current != null) return lastSig
     val sinkSig = SinkGeneration.signature(spark, sinkDir)
     val mapSig = mappingPath.fold(0L) { mp =>
       val f = new java.io.File(mp)
@@ -88,7 +76,7 @@ final class ServingCore(
     catch { case _: Exception => lastGoodMapping }
   }
 
-  def engine: SeqEngine = state()._2
+  def engine: SeqEngine = state().engine
 
   /** Readiness probe: builds (or revalidates) the serving state and
     * reports whether the core can answer queries. Intentionally
@@ -98,30 +86,24 @@ final class ServingCore(
   def ready: Boolean =
     try { state(); true } catch { case _: Exception => false }
 
-  /** The sink generation the current engine was built for. Probes the
-    * signature (rebuilding if stale), so the returned value is current
-    * as of this call — capture it at request start and pass it to
-    * [[putResponse]] so a response computed against generation G is
-    * never cached after a concurrent rebuild moved to G+1. */
-  def generation(): Long = state()._1
+  /** The signature of the sink generation the current engine was built
+    * for. Probes the signature (rebuilding if stale), so the returned
+    * value is current as of this call. */
+  def generation(): Long = state().sig
 
-  private def state(): (Long, SeqEngine, Seq[String]) = {
+  private def state(): Generation = {
     val sig = sinkSignature()
-    val cached = engineCache
-    if (cached != null && cached._1 == sig) return cached
+    val cached = current
+    if (cached != null && cached.sig == sig) return cached
     synchronized {
-      val again = engineCache
-      if (again != null && again._1 == sig) return again
+      val again = current
+      if (again != null && again.sig == sig) return again
       // blocking: a mapping-only reload rebuilds an IDENTICAL sink
       // plan, and an in-flight async unpersist of the old entry could
       // land after the new persist and evict it by plan equality —
       // leaving serving silently uncached. Rebuilds are ≤1/s and off
       // the request path, so the synchronous drop costs nothing.
-      if (again != null) again._2.table.df.unpersist(blocking = true)
-      planCache.clear()
-      responseCache.clear()
-      prefixCache.clear()
-      objCache.clear()
+      if (again != null) again.engine.table.df.unpersist(blocking = true)
       // mapping hot-reload: re-read the file on every generation move
       // (mapping edits move the signature; sink appends re-read an
       // unchanged file — cheap, it's a KB-scale YAML). Parse failures
@@ -129,12 +111,6 @@ final class ServingCore(
       val liveMapping = currentMapping
       val p = new org.apache.hadoop.fs.Path(sinkDir)
       val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      // few fat in-memory partitions, clustered by date: a point query
-      // launches `servingPartitions` tasks (scheduling is the latency
-      // floor, not the scan) and the date-window filter skips whole
-      // cached batches via their min/max stats
-      val servingPartitions =
-        spark.conf.get("spark.graft.serving.partitions", "8").toInt
       // sortWithinPartitions makes every cached batch date-contiguous,
       // so a date-window predicate skips whole batches via their
       // min/max stats — without it the hash shuffle interleaves days
@@ -155,9 +131,9 @@ final class ServingCore(
         if (sinkBytes > maxPinned) org.apache.spark.storage.StorageLevel.DISK_ONLY
         else org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
       val df = (if (raw.columns.contains("date"))
-          raw.repartition(servingPartitions, col("date"))
+          raw.repartition(ServingPartitions, col("date"))
             .sortWithinPartitions("date", "mid")
-        else raw.coalesce(servingPartitions))
+        else raw.coalesce(ServingPartitions))
         .persist(level)
       val eng = new SeqEngine(DocsTable(df, liveMapping))
       // day partitions newest-first, straight from the FS listing (no
@@ -167,58 +143,19 @@ final class ServingCore(
         else fs.listStatus(p).map(_.getPath.getName)
           .filter(_.startsWith("date=")).map(_.stripPrefix("date="))
           .sorted.reverse.toSeq
-      val state0 = (sig, eng, dates)
-      engineCache = state0
-      state0
+      val fresh = new Generation(sig, eng, dates)
+      current = fresh
+      fresh
     }
   }
 
-  /** Cached rendered response for an identical request body at the
-    * CURRENT generation (probing first, so a sink append is never
-    * masked by a stale hit). */
-  def cachedResponse(raw: String): Option[String] =
-    Option(responseCache.get((generation(), raw)))
-
-  /** Cache a rendered response, keyed by the generation it was computed
-    * against — a response raced by a rebuild keys under the OLD
-    * generation and is simply never read again, closing the window
-    * where a stale response could outlive the rebuild's clear(). */
-  def putResponse(gen: Long, raw: String, resp: String): Unit = {
-    if (responseCache.size() > 1024) responseCache.clear()
-    responseCache.put((gen, raw), resp)
-    ()
-  }
-
-  /** Generation-keyed memoization of an arbitrary rendered response
-    * (the gRPC handlers cache whole proto responses with it, the same
-    * way [[putResponse]] caches HTTP bodies): a repeated identical
-    * aggregation/histogram request becomes a map lookup until the sink
-    * generation moves. Entries computed against a raced-out generation
-    * key under the old generation and are never read again. */
-  def cachedObj[T <: AnyRef](key: String)(build: => T): T = {
-    if (objCache.size() > 1024) objCache.clear()
-    val k = (generation(), key)
-    val hit = objCache.get(k)
-    if (hit != null) return hit.asInstanceOf[T]
-    // build OUTSIDE the map (get/build/putIfAbsent, not computeIfAbsent):
-    // a multi-second Spark job must not hold a hash-bin lock and stall
-    // unrelated cache hits that collide on the bin. A racing duplicate
-    // build is the cheaper failure mode.
-    val built = build
-    val raced = objCache.putIfAbsent(k, built)
-    (if (raced != null) raced else built).asInstanceOf[T]
-  }
-
-  private val objCache =
-    new java.util.concurrent.ConcurrentHashMap[(Long, String), AnyRef]()
-
-  /** Memoized request plan: a repeated request re-executes the SAME
-    * DataFrame, so parse/analyze/optimize/physical-planning happen once
-    * and the warm path pays only job scheduling + execution. */
-  def cachedPlan(key: String)(build: => org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    if (planCache.size() > 512) planCache.clear() // crude bound; keys are request shapes
-    planCache.computeIfAbsent((generation(), key), _ => build)
-  }
+  /** Memoizes `build` under `key` in the current generation's memo (the
+    * gRPC handlers cache whole proto responses with it, the HTTP facade
+    * its `/search` bodies): a repeated identical request becomes a map
+    * lookup until the sink generation moves. Callers prefix the key
+    * with their kind so the kinds never collide. */
+  def memo[T <: AnyRef](key: String)(build: => T): T =
+    state().memo(key)(build).asInstanceOf[T]
 
   /** Incremental top-page scan (the reference's O3 early termination +
     * O4 fraction-order scan, SeqEngine.searchPrefix): day partitions
@@ -228,58 +165,80 @@ final class ServingCore(
     * day, not 365. Falls back to the full-range plan when the sink
     * isn't day-partitioned.
     */
-  def servingPage(req: SearchRequest): Array[org.apache.spark.sql.Row] = {
-    val eng = engine
+  def servingPage(req: SearchRequest): Array[Row] = {
+    val g = state()
     val need = req.offset + req.size
-    if (need <= PrefixRows) {
-      // scroll-context path: one job fills the query's top-PrefixRows
-      // prefix, every page of the same query slices it driver-side
-      val pk = (generation(), s"${req.query}|${req.fromMs}|${req.toMs}|${req.asc}")
-      if (prefixCache.size() > 64) prefixCache.clear()
-      // get/build/putIfAbsent (not computeIfAbsent): the prefix fill is
-      // a Spark job and must not hold a hash-bin lock over other
-      // queries' instant cache hits
-      val pre = {
-        val hit = prefixCache.get(pk)
-        if (hit != null) hit
-        else {
-          val built = collectPrefix(eng, req, PrefixRows)
-          val raced = prefixCache.putIfAbsent(pk, built)
-          if (raced != null) raced else built
-        }
-      }
-      // a shorter-than-capacity prefix IS the complete match set, so
-      // any slice of it is exact; otherwise it covers need ≤ PrefixRows
-      pre.slice(req.offset, need)
-    } else {
-      collectPrefix(eng, req, need).drop(req.offset)
-    }
+    // a shorter-than-capacity prefix IS the complete match set, so any
+    // slice of it is exact; otherwise it covers need ≤ PrefixRows
+    if (need <= PrefixRows)
+      g.pages(s"${req.query}|${req.fromMs}|${req.toMs}|${req.asc}")(
+        collectPrefix(g, req, PrefixRows)).slice(req.offset, need)
+    else collectPrefix(g, req, need).drop(req.offset)
   }
 
-  /** Top-`n` matches via the incremental day-window scan. */
-  private def collectPrefix(eng: SeqEngine, req: SearchRequest,
-      n: Int): Array[org.apache.spark.sql.Row] = {
-    val dates = state()._3
-    val hasDate = eng.table.df.columns.contains("date")
+  /** Top-`n` matches via the incremental day-window scan over `g`. */
+  private def collectPrefix(g: Generation, req: SearchRequest, n: Int): Array[Row] = {
+    val eng = g.engine
     val windows: Seq[Option[Seq[String]]] =
-      if (!hasDate || dates.isEmpty) Seq(None)
-      else Seq(1, 4, 16).filter(_ < dates.size).map(k =>
-        Some(if (req.asc) dates.takeRight(k) else dates.take(k))) :+ None
+      if (!eng.table.df.columns.contains("date") || g.dates.isEmpty) Seq(None)
+      else Seq(1, 4, 16).filter(_ < g.dates.size).map(k =>
+        Some(if (req.asc) g.dates.takeRight(k) else g.dates.take(k))) :+ None
     for (w <- windows) {
       val extra = w match {
         case Some(ds) => col("date").isin(ds: _*)
         case None     => lit(true)
       }
-      val key = s"page:${req.query}|${req.fromMs}|${req.toMs}|${req.asc}|$n:" +
+      // memoized request plan: a repeated request re-executes the SAME
+      // DataFrame, so parse/analyze/optimize/physical-planning happen
+      // once and the warm path pays only job scheduling + execution
+      val key = s"plan|${req.query}|${req.fromMs}|${req.toMs}|${req.asc}|$n:" +
         w.map(_.mkString(",")).getOrElse("all")
-      val plan = cachedPlan(key) {
+      val plan = g.memo(key) {
         eng.withIdString(eng.searchPrefix(
             req.query, req.fromMs, req.toMs, n, req.asc, extra))
           .select(col("id"), col("mid"), col("rid"), col("_raw"))
-      }
+      }.asInstanceOf[DataFrame]
       val rows = plan.collect()
       if (rows.length >= n || w.isEmpty) return rows
     }
     Array.empty
+  }
+}
+
+private object ServingCore {
+  // sized to cover the reference's published paging scenario (k6
+  // seq-db-paging.js: 50 pages x 100 docs = offset 5000) from ONE
+  // prefix job; the 64-prefix cap bounds total driver memory
+  val PrefixRows = 5120
+
+  // few fat in-memory partitions, clustered by date: a point query
+  // launches this many tasks (scheduling is the latency floor, not the
+  // scan) and the date-window filter skips whole cached batches via
+  // their min/max stats
+  val ServingPartitions = 8
+
+  /** One sink generation and the caches computed against it. */
+  final class Generation(val sig: Long, val engine: SeqEngine, val dates: Seq[String]) {
+    val pages = new BoundedCache[Array[Row]](64)
+    val memo = new BoundedCache[AnyRef](1024)
+  }
+
+  /** The one cache idiom: a hit is a lock-free map read; a miss builds
+    * OUTSIDE the map, then `putIfAbsent` (not computeIfAbsent — a
+    * multi-second Spark job must not hold a hash-bin lock and stall
+    * unrelated hits that collide on the bin; a racing duplicate build
+    * is the cheaper failure mode). Inserting past `cap` entries clears
+    * the map first. */
+  final class BoundedCache[V <: AnyRef](cap: Int) {
+    private val map = new java.util.concurrent.ConcurrentHashMap[String, V]()
+
+    def apply(key: String)(build: => V): V = {
+      val hit = map.get(key)
+      if (hit != null) return hit
+      val built = build
+      if (map.size() >= cap) map.clear()
+      val raced = map.putIfAbsent(key, built)
+      if (raced != null) raced else built
+    }
   }
 }

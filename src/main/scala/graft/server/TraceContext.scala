@@ -38,9 +38,6 @@ object TraceContext {
   @volatile var slowQueryMs: Long =
     sys.env.get("GRAFT_SLOW_QUERY_MS").flatMap(_.toLongOption).getOrElse(1000L)
 
-  /** One structured stderr line when a request exceeds the threshold,
-    * carrying the caller's trace id when present — the reference logs
-    * the same correlation from its always-sampled debug spans. */
   /** Escapes a string for safe interpolation inside a JSON string literal:
     * backslash, quote, and control characters (a caller-supplied header
     * value must not be able to break the line or forge log fields). */
@@ -52,6 +49,9 @@ object TraceContext {
       case c             => c.toString
     }
 
+  /** One structured stderr line when a request exceeds the threshold,
+    * carrying the caller's trace id when present — the reference logs
+    * the same correlation from its always-sampled debug spans. */
   def logIfSlow(kind: String, query: String, tookMs: Long): Unit =
     if (tookMs >= slowQueryMs) {
       val q = jsonEscape(query).take(512)

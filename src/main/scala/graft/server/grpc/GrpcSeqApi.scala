@@ -125,23 +125,8 @@ final class GrpcSeqApi(
   // network/ratelimiter.go token bucket): rejected calls get
   // RESOURCE_EXHAUSTED, the canonical gRPC back-off signal ----
   private val inflight = new java.util.concurrent.atomic.AtomicInteger(0)
-  private val bucketTokens =
-    new java.util.concurrent.atomic.AtomicLong(limits.burst * 1000000L)
-  @volatile private var bucketLastNs = System.nanoTime()
-
-  private def tryAdmitBucket(): Boolean = {
-    if (limits.requestsPerSec <= 0) return true
-    synchronized {
-      val now = System.nanoTime()
-      val refill = ((now - bucketLastNs) / 1e9 * limits.requestsPerSec * 1000000L).toLong
-      if (refill > 0) {
-        bucketLastNs = now
-        bucketTokens.set(math.min(limits.burst * 1000000L, bucketTokens.get() + refill))
-      }
-      if (bucketTokens.get() >= 1000000L) { bucketTokens.addAndGet(-1000000L); true }
-      else false
-    }
-  }
+  private val requestLimiter =
+    new graft.server.KeyedRateLimiter(limits.requestsPerSec, limits.burst)
 
   private object AdmissionInterceptor extends org.sparkproject.connect.grpc.ServerInterceptor {
     override def interceptCall[ReqT, RespT](
@@ -155,7 +140,7 @@ final class GrpcSeqApi(
           new org.sparkproject.connect.grpc.Metadata())
         return new org.sparkproject.connect.grpc.ServerCall.Listener[ReqT] {}
       }
-      if (!tryAdmitBucket()) {
+      if (!requestLimiter.tryAcquire("")) {
         if (limits.maxInflight > 0) inflight.decrementAndGet()
         call.close(Status.RESOURCE_EXHAUSTED.withDescription("rate limit exceeded"),
           new org.sparkproject.connect.grpc.Metadata())
@@ -473,7 +458,7 @@ final class GrpcSeqApi(
     * unlike the rate-limit key which deliberately drops the range. */
   private def cachedResp[T <: AnyRef](key: String)(build: => T): T =
     serving match {
-      case Some(core) => core.cachedObj(key)(build)
+      case Some(core) => core.memo(key)(build)
       case None       => build
     }
 
