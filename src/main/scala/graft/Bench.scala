@@ -4,29 +4,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder0 = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      // keep the DELIBERATE constant partition keys on bounded global
-      // windows (Packing/Similarity/CorpusStats): Spark 4's
-      // EliminateWindowPartitions folds them away, which both
-      // re-raises the WindowExec warning the constant exists to
-      // silence AND makes a real missing-partitionBy indistinguishable
-      // from an intentional bounded one in the logs
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.EliminateWindowPartitions")
-      // events.parquet carries pandas ns timestamps; see TestTables
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // scratch override: shuffle/spill/localCheckpoint follow GRAFT_TMP
-    // (see GraftTmp — scratch WRITES are what a credit-throttled cloud
-    // disk punishes; a cluster provisions local dirs on fast media)
-    val spark = GraftTmp.sparkLocalDir()
-      .fold(builder0)(d => builder0.config("spark.local.dir", d))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = session(cpus)
     // warmup: session/scheduler init + parquet reader paths, so the
     // first timed query doesn't carry one-time JVM costs
     Seq("lineitem", "events", "documents", "embeddings").foreach { t =>
@@ -925,5 +903,36 @@ object Bench {
     // JVM alive after main returns — five such zombies were found
     // holding 65 GB during a sweep, polluting every later run
     sys.exit(0)
+  }
+
+  /** The session every bench-shaped entry point runs on (Bench, Verify,
+    * Explain and the dev tools), so a plan or a time read off any of
+    * them is the one the bench measures: `local[cpus]` with as many
+    * shuffle partitions, UTC, AQE, no UI. */
+  def session(cpus: String): SparkSession = {
+    val builder0 = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.ui.enabled", "false")
+      // keep the DELIBERATE constant partition keys on bounded global
+      // windows (Packing/Similarity/CorpusStats): Spark 4's
+      // EliminateWindowPartitions folds them away, which both
+      // re-raises the WindowExec warning the constant exists to
+      // silence AND makes a real missing-partitionBy indistinguishable
+      // from an intentional bounded one in the logs
+      .config("spark.sql.optimizer.excludedRules",
+        "org.apache.spark.sql.catalyst.optimizer.EliminateWindowPartitions")
+      // events.parquet carries pandas ns timestamps; see TestTables
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+    // scratch override: shuffle/spill/localCheckpoint follow GRAFT_TMP
+    // (see GraftTmp — scratch WRITES are what a credit-throttled cloud
+    // disk punishes; a cluster provisions local dirs on fast media)
+    val spark = GraftTmp.sparkLocalDir()
+      .fold(builder0)(d => builder0.config("spark.local.dir", d))
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
   }
 }

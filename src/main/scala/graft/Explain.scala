@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: print formatted physical plans for selected queries and
   * flag scale smells (missing pushdown, missing broadcast, no codegen).
   * Usage: runMain graft.Explain [sfDir] [queryName ...]
@@ -10,13 +8,7 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val names = if (args.length > 1) args.drop(1).toSeq else SparkEntry.queries.keys.toSeq.sorted
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Bench.session("4")
     spark.sparkContext.setLogLevel("ERROR")
     for (name <- names; fn <- SparkEntry.queries.get(name)) {
       println(s"\n======== $name ========")

@@ -24,7 +24,7 @@ object GraftTmp {
 
   /** Spark configs to apply when scratch is overridden: local dirs
     * (shuffle, spill, localCheckpoint blocks) follow the scratch
-    * root. Call from every `SparkSession.builder()` entry point.
+    * root. Applied by [[Bench.session]].
     */
   def sparkLocalDir(): Option[String] =
     if (overridden) {

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,22 +9,7 @@ object Verify {
     // iteration only — the driver always runs the full gate)
     val only: Set[String] =
       if (args.length > 2) args(2).split(",").toSet else Set.empty
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val builder0 = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // events.parquet carries pandas ns timestamps; see TestTables
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // preserve deliberate constant-key windows (see Bench.scala)
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.EliminateWindowPartitions")
-    // scratch override for shuffle/spill dirs (see GraftTmp)
-    val spark = GraftTmp.sparkLocalDir()
-      .fold(builder0)(d => builder0.config("spark.local.dir", d))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Bench.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
     new java.io.File(outDir).mkdirs()
     val failed = scala.collection.mutable.ArrayBuffer[String]()
     val ran = SparkEntry.queries

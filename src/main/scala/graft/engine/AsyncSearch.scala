@@ -1,24 +1,22 @@
 package graft.engine
 
 import java.nio.file.{Files, Paths}
-import java.util.concurrent.{ConcurrentHashMap, Executors, Future => JFuture}
+import java.util.concurrent.{ConcurrentHashMap, Executors, TimeUnit}
 
+import org.apache.spark.JobExecutionStatus
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Async search (X1, SURVEY.md §2.10): fire a search in the background,
-  * persist the result so it survives restarts, poll/fetch/cancel by id.
-  * The reference persists per-fraction QPRs (fracmanager/async_searcher
-  * .go:52-260); here the finished result lands as parquet under
-  * `resultsDir/<searchId>` with a status marker file — partial-progress
-  * checkpointing is delegated to Spark's own stage retry machinery.
+/** Async search (X1, SURVEY.md §2.10): the reference persists
+  * per-fraction partial results so a long search survives restarts and
+  * can serve partial answers while running
+  * (fracmanager/async_searcher.go:52-260). Here the time range splits
+  * into interval-aligned chunks (fraction analogue), each chunk's
+  * matches are written under
+  * `resultsDir/<id>/chunk=<startMs>` with a done-marker, newest first;
+  * a restart [[resume]]s from the missing chunks and [[fetchPartial]]
+  * serves whatever is complete at any moment.
   */
-final class AsyncSearchManager(spark: SparkSession, resultsDir: String, parallelism: Int = 4) {
-
-  sealed trait Status
-  case object Running extends Status
-  case object Done extends Status
-  case object Canceled extends Status
-  final case class Failed(err: String) extends Status
+final class ChunkedAsyncSearcher(spark: SparkSession, resultsDir: String) {
 
   // re-creatable: a server stop() shuts the pool down with it, and a
   // restarted server (same searcher instance, e.g. across test
@@ -26,92 +24,12 @@ final class AsyncSearchManager(spark: SparkSession, resultsDir: String, parallel
   @volatile private var poolRef: java.util.concurrent.ExecutorService = _
   private def pool: java.util.concurrent.ExecutorService = synchronized {
     if (poolRef == null || poolRef.isShutdown)
-      poolRef = Executors.newFixedThreadPool(parallelism)
-    poolRef
-  }
-  private val jobs = new ConcurrentHashMap[String, JFuture[_]]()
-
-  private def statusPath(id: String) = Paths.get(s"$resultsDir/$id.status")
-  private def dataPath(id: String) = s"$resultsDir/$id"
-
-  /** Submit; returns immediately. `query` runs on a separate thread in
-    * its own Spark job group so cancel() can kill its stages. */
-  def start(id: String, query: => DataFrame): Unit = {
-    Files.createDirectories(Paths.get(resultsDir))
-    Files.writeString(statusPath(id), "RUNNING")
-    val task = pool.submit(new Runnable {
-      override def run(): Unit = {
-        spark.sparkContext.setJobGroup(s"async-$id", s"async search $id", interruptOnCancel = true)
-        try {
-          query.write.mode("overwrite").parquet(dataPath(id))
-          Files.writeString(statusPath(id), "DONE")
-        } catch {
-          case e: Throwable =>
-            if (Files.readString(statusPath(id)) != "CANCELED")
-              Files.writeString(statusPath(id), s"FAILED:${e.getMessage}")
-        } finally spark.sparkContext.clearJobGroup()
-      }
-    })
-    jobs.put(id, task)
-  }
-
-  def status(id: String): Status = {
-    if (!Files.exists(statusPath(id))) return Failed("unknown search id")
-    Files.readString(statusPath(id)) match {
-      case "RUNNING"                 => Running
-      case "DONE"                    => Done
-      case "CANCELED"                => Canceled
-      case s if s.startsWith("FAILED") => Failed(s.stripPrefix("FAILED:"))
-      case other                     => Failed(s"corrupt status: $other")
-    }
-  }
-
-  /** Fetch the persisted result (only when Done). Survives manager
-    * restarts — any new manager over the same resultsDir can serve it. */
-  def fetch(id: String): Option[DataFrame] =
-    if (status(id) == Done) Some(spark.read.parquet(dataPath(id))) else None
-
-  def cancel(id: String): Boolean = {
-    val f = jobs.get(id)
-    if (f == null || f.isDone) false
-    else {
-      Files.writeString(statusPath(id), "CANCELED")
-      spark.sparkContext.cancelJobGroup(s"async-$id")
-      f.cancel(true)
-      true
-    }
-  }
-
-  /** Wait (test helper) until the job leaves Running, up to timeoutMs. */
-  def await(id: String, timeoutMs: Long): Status = {
-    val deadline = System.currentTimeMillis() + timeoutMs
-    while (status(id) == Running && System.currentTimeMillis() < deadline) Thread.sleep(50)
-    status(id)
-  }
-
-  def shutdown(): Unit = synchronized {
-    if (poolRef != null) { poolRef.shutdownNow(); () }
-  }
-}
-
-/** Chunked async search: the reference persists per-fraction partial
-  * results so a long search survives restarts and can serve partial
-  * answers while running (fracmanager/async_searcher.go:52-260). Here
-  * the time range splits into interval-aligned chunks (fraction
-  * analogue), each chunk's matches are written under
-  * `resultsDir/<id>/chunk=<startMs>` with a done-marker, newest first;
-  * a restart [[resume]]s from the missing chunks and [[fetchPartial]]
-  * serves whatever is complete at any moment.
-  */
-final class ChunkedAsyncSearcher(spark: SparkSession, resultsDir: String) {
-
-  // re-creatable across server stop/start — see AsyncSearcher.pool
-  @volatile private var poolRef: java.util.concurrent.ExecutorService = _
-  private def pool: java.util.concurrent.ExecutorService = synchronized {
-    if (poolRef == null || poolRef.isShutdown)
       poolRef = Executors.newFixedThreadPool(2)
     poolRef
   }
+  // ids submitted to the pool and not yet finished, so shutdown() can
+  // cancel their jobs
+  private val running = ConcurrentHashMap.newKeySet[String]()
 
   private def idDir(id: String) = s"$resultsDir/$id"
   private def chunkDir(id: String, startMs: Long) = s"${idDir(id)}/chunk=$startMs"
@@ -133,6 +51,7 @@ final class ChunkedAsyncSearcher(spark: SparkSession, resultsDir: String) {
     val spark = engine.table.df.sparkSession
     spark.sparkContext.setJobGroup(s"async-$id", s"async search $id",
       interruptOnCancel = true)
+    var finished = false
     try {
       val todo = chunkStarts(fromMs, toMs, chunkMs).reverse
         .filterNot(s => Files.exists(marker(id, s)))
@@ -147,11 +66,17 @@ final class ChunkedAsyncSearcher(spark: SparkSession, resultsDir: String) {
       }
       if (!isCanceled(id))
         Files.writeString(Paths.get(s"${idDir(id)}/.complete"), "done")
+      finished = true
     } catch {
       // a canceled job group surfaces as SparkException in-flight —
       // swallow it only for canceled ids, the partials are still valid
       case _: Throwable if isCanceled(id) => ()
-    } finally spark.sparkContext.clearJobGroup()
+    } finally {
+      // an interrupt ends only this thread's wait: a chunk job it
+      // submitted after shutdown() canceled the group would run on
+      if (!finished) spark.sparkContext.cancelJobGroup(s"async-$id")
+      spark.sparkContext.clearJobGroup()
+    }
   }
 
   /** Cancel `id`: no-op (false) when already complete; otherwise marks
@@ -195,9 +120,11 @@ final class ChunkedAsyncSearcher(spark: SparkSession, resultsDir: String) {
     AsyncSearchFiles.writeAtomic(Paths.get(s"${idDir(id)}/.request"),
       s"$fromMs\u0000$toMs\u0000$chunkMs\u0000$query"
         .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    running.add(id)
     pool.submit(new Runnable {
       override def run(): Unit =
-        ChunkedAsyncSearcher.this.run(id, engine, query, fromMs, toMs, chunkMs)
+        try ChunkedAsyncSearcher.this.run(id, engine, query, fromMs, toMs, chunkMs)
+        finally running.remove(id)
     })
     ()
   }
@@ -253,8 +180,40 @@ final class ChunkedAsyncSearcher(spark: SparkSession, resultsDir: String) {
     else dir.listFiles().count(_.getName.startsWith(".done_"))
   }
 
+  /** Stop the pool and every in-flight chunk job: interrupt the
+    * workers, cancel the job group of each submitted id, wait at most
+    * 60 s for the workers to exit, then for the canceled jobs' tasks to
+    * end. Persisted chunks and requests stay, so a restarted searcher
+    * resumes the unfinished searches. */
   def shutdown(): Unit = synchronized {
-    if (poolRef != null) { poolRef.shutdownNow(); () }
+    if (poolRef != null) {
+      val ids = running.toArray(Array.empty[String]).toSeq
+      poolRef.shutdownNow()
+      ids.foreach(id => spark.sparkContext.cancelJobGroup(s"async-$id"))
+      if (poolRef.awaitTermination(60, TimeUnit.SECONDS) && ids.nonEmpty &&
+          !spark.sparkContext.isStopped)
+        awaitTasksEnded(ids)
+      // runs the pool dropped before they started never leave the set
+      ids.foreach(running.remove)
+    }
+  }
+
+  /** Wait, at most 60 s, until no job of `ids` runs a task. Canceled
+    * tasks are killed asynchronously, and one that finishes its write
+    * late commits a part file into a chunk dir a resumed searcher may
+    * already have rewritten. The status tracker learns of jobs from the
+    * listener bus, so a fence job goes first: once the tracker has seen
+    * it, it has seen every job submitted before it. */
+  private def awaitTasksEnded(ids: Seq[String]): Unit = {
+    val st = spark.sparkContext.statusTracker
+    val fence = spark.sparkContext.parallelize(Seq(0), 1).countAsync().jobIds.head
+    def busy(id: String) = st.getJobIdsForGroup(s"async-$id").flatMap(st.getJobInfo)
+      .exists(j => j.status == JobExecutionStatus.RUNNING ||
+        j.stageIds.flatMap(st.getStageInfo).exists(_.numActiveTasks > 0))
+    val deadline = System.currentTimeMillis() + 60000
+    while ((st.getJobInfo(fence).isEmpty || ids.exists(busy)) &&
+        System.currentTimeMillis() < deadline)
+      Thread.sleep(20)
   }
 }
 

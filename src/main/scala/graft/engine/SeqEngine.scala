@@ -114,6 +114,19 @@ final class SeqEngine(val table: DocsTable) extends Serializable {
       totalDocs = row.getLong(2))
   }
 
+  /** `[fromMs, toMs]` clamped to the table's actual time range, for an
+    * async search's chunk layout: matches outside it cannot exist, and
+    * the open-range request every client sends ([0, Long.MaxValue])
+    * would otherwise enumerate ~10^14 day chunks and leave the search
+    * running forever. A span that misses the table (or an empty table)
+    * collapses to the single instant `fromMs`. */
+  def clampSpan(fromMs: Long, toMs: Long): (Long, Long) = {
+    val st = status()
+    val lo = math.max(fromMs, st.oldestStorageTimeMs.getOrElse(fromMs))
+    val hi = math.min(toMs, st.newestStorageTimeMs.getOrElse(fromMs))
+    if (lo <= hi) (lo, hi) else (fromMs, fromMs)
+  }
+
   /** Time-pruned, filtered, replica-deduplicated doc set. The [from,to]
     * MID range is inclusive on both ends (frac/processor/search.go:211-232).
     */

@@ -1,15 +1,16 @@
-package graft.server
+package graft.engine
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** The docs sink's generation probe and its one open. [[ServingCore]]
-  * and the facade's default read path both resolve the sink through
-  * here, so either one re-resolves the sink only when [[signature]]
-  * moves — the reference searcher's in-memory fraction list
-  * (fracmanager/searcher.go:89-101) instead of a per-query rediscovery.
+/** A docs sink's generation probe and its one open. The serving layer
+  * (`ServingCore` and the HTTP facade's default read path) re-resolves
+  * the sink only when [[signature]] moves — the reference searcher's
+  * in-memory fraction list (fracmanager/searcher.go:89-101) instead of
+  * a per-query rediscovery. Every other reader of a sink path (tiered
+  * tables, the index analyzer) opens it through [[open]] too.
   */
-private[server] object SinkGeneration {
+private[graft] object SinkGeneration {
 
   /** Top-level FS statuses of the sink folded into one value: a file or
     * partition added or removed changes the listing, and a file landing

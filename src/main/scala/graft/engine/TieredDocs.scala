@@ -26,14 +26,12 @@ object TieredDocs {
       coldPath: String,
       boundaryMs: Long,
       mapping: SeqMapping): DocsTable = {
-    // mergeSchema within each tier for the same reason the serving
-    // sink reader merges: a tier's files written under successive
-    // mappings differ in columns, and one random footer would drop
-    // the accreted fields (cross-tier drift is already handled by the
-    // allowMissingColumns union)
-    val hot = spark.read.option("mergeSchema", "true").parquet(hotPath)
+    // each tier is one sink (its files carry the fields accreted under
+    // successive mappings); cross-tier drift is the allowMissingColumns
+    // union's job
+    val hot = SinkGeneration.open(spark, hotPath)
       .where(col("mid") >= boundaryMs)
-    val cold = spark.read.option("mergeSchema", "true").parquet(coldPath)
+    val cold = SinkGeneration.open(spark, coldPath)
       .where(col("mid") < boundaryMs)
     DocsTable(hot.unionByName(cold, allowMissingColumns = true), mapping)
   }
@@ -62,10 +60,10 @@ object TieredDocs {
       coldPath: String,
       boundaryMs: Long,
       mapping: SeqMapping): TieredTable = {
-    val hot = spark.read.option("mergeSchema", "true").parquet(hotPath)
+    val hot = SinkGeneration.open(spark, hotPath)
       .where(col("mid") >= boundaryMs)
     try {
-      val cold = spark.read.option("mergeSchema", "true").parquet(coldPath)
+      val cold = SinkGeneration.open(spark, coldPath)
         .where(col("mid") < boundaryMs)
       TieredTable(
         DocsTable(hot.unionByName(cold, allowMissingColumns = true), mapping),
@@ -112,7 +110,7 @@ object TieredDocs {
       boundaryMs: Long,
       mapping: SeqMapping): DocsTable = {
     def readTier(paths: Seq[String]): Option[DataFrame] =
-      paths.map(p => spark.read.option("mergeSchema", "true").parquet(p))
+      paths.map(p => SinkGeneration.open(spark, p))
         .reduceOption(_.unionByName(_, allowMissingColumns = true))
     val coldQ = readTier(stores.coldQuery).map(_.where(col("mid") < boundaryMs))
     val hotQ = readTier(stores.hotQuery).map { hot =>

@@ -9,7 +9,7 @@ import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-import graft.engine.{AggFunc, AggRequest, ChunkedAsyncSearcher, DocsTable, SearchRequest, SeqEngine}
+import graft.engine.{AggFunc, AggRequest, ChunkedAsyncSearcher, DocsTable, SearchRequest, SeqEngine, SinkGeneration}
 import graft.ingest.BulkIngest
 import graft.model.SeqMapping
 
@@ -455,15 +455,7 @@ final class EsHttpFacade(
       val chunkMs = ("\"chunk_ms\"\\s*:\\s*(\\d+)").r
         .findFirstMatchIn(raw).map(_.group(1).toLong).getOrElse(86400000L)
       val eng = readEngine()
-      // clamp the requested span to the table's actual time range
-      // (matches outside it cannot exist) — the open-range request
-      // every client sends ([0, Long.MaxValue]) would otherwise
-      // enumerate ~10^14 day chunks in the background pool and hang
-      // the search in 'running' forever. Same clamp as the gRPC path.
-      val st = eng.status()
-      val lo = math.max(req.fromMs, st.oldestStorageTimeMs.getOrElse(req.fromMs))
-      val hi = math.min(req.toMs, st.newestStorageTimeMs.getOrElse(req.fromMs))
-      val (fromMs, toMs) = if (lo <= hi) (lo, hi) else (req.fromMs, req.fromMs)
+      val (fromMs, toMs) = eng.clampSpan(req.fromMs, req.toMs)
       asyncSearcher.startAsync(id, eng, req.query, fromMs, toMs, chunkMs)
       reply(ex, 200, s"""{"id":${quote(id)}}""")
     }

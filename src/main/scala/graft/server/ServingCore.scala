@@ -3,7 +3,7 @@ package graft.server
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
-import graft.engine.{DocsTable, SearchRequest, SeqEngine}
+import graft.engine.{DocsTable, SearchRequest, SeqEngine, SinkGeneration}
 import graft.model.SeqMapping
 
 /** Serving-mode machinery shared by the HTTP facade and the gRPC API:

@@ -612,13 +612,8 @@ final class GrpcSeqApi(
     } catch { case _: Throwable => () }
     val eng = engine
     // the proto has no chunk parameter — the server picks the chunk
-    // layout. Clamp the requested span to the table's actual time
-    // range first (matches outside it cannot exist), else an open
-    // [0, Long.MaxValue] request would enumerate ~10^14 day chunks.
-    val st = eng.status()
-    val lo = math.max(r.q.fromMs, st.oldestStorageTimeMs.getOrElse(r.q.fromMs))
-    val hi = math.min(r.q.toMs, st.newestStorageTimeMs.getOrElse(r.q.fromMs))
-    val (from, to) = if (lo <= hi) (lo, hi) else (r.q.fromMs, r.q.fromMs)
+    // layout over the table's actual time range
+    val (from, to) = eng.clampSpan(r.q.fromMs, r.q.toMs)
     asyncSearcher.startAsync(id, eng, r.q.query, from, to)
     PStartAsyncResponse(id)
   }

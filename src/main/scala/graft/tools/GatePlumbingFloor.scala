@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: measure each streaming gate row's PLUMBING floor — the
   * no-op twin from [[graft.tables.StreamingGate.plumbingFloor]] (same
   * slices, checkpoint, sentinels, identity transform) — so the pinned
@@ -14,16 +12,7 @@ import org.apache.spark.sql.SparkSession
 object GatePlumbingFloor {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val builder0 = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-    val spark = graft.GraftTmp.sparkLocalDir()
-      .fold(builder0)(d => builder0.config("spark.local.dir", d))
-      .getOrCreate()
+    val spark = graft.Bench.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
     spark.sparkContext.setLogLevel("ERROR")
     val rows = Seq("dp_stream_dedup", "dp_stream_neardedup",
       "dp_stream_spanremove", "dp_stream_sessionize",

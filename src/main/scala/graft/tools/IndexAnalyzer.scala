@@ -27,7 +27,7 @@ object IndexAnalyzer {
 
   /** Per-file stats: (date, file, rows, mid_min, mid_max). */
   def perFile(spark: SparkSession, path: String): DataFrame =
-    spark.read.option("mergeSchema", "true").parquet(path)
+    graft.engine.SinkGeneration.open(spark, path)
       .select(col("date"), col("mid"), input_file_name().as("file"))
       .groupBy(col("date"), col("file"))
       .agg(count(lit(1)).as("rows"),

@@ -1,88 +1,58 @@
 package graft.tools
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
+import java.util.Locale
 
-/** Job-level decomposition of ANY SparkEntry row (the generic form of
-  * [[ProfileStreamNearDedup]]): prints every Spark job's wall time and
-  * description for two consecutive runs (first warms the JVM/fixture,
-  * second is the measure), so a slow row can be attributed to SPECIFIC
-  * jobs instead of guessed at.
-  * Usage: runMain graft.tools.ProfileRow <sfDir> <query> [query...]
+/** The measurement path for any SparkEntry row: builds it on Bench's
+  * session and runs its full plan twice through [[RunRecorder]] (the
+  * first run warms the JVM and fixtures, the second is the measure).
+  * For the measure it prints one line per Spark job (wall, tasks,
+  * executor CPU) and a totals line (Catalyst phases, jobs, stages,
+  * tasks, executor run and CPU time, bytes read, shuffle, spill and the
+  * driver gap), so a slow row is attributed to a layer and to specific
+  * jobs instead of guessed at. Trailing `k=v` arguments are set as
+  * session confs first. A failing row propagates its full stack — the
+  * debugging companion to Bench's truncated `errors` entries.
+  * Usage: runMain graft.tools.ProfileRow <sfDir> <row> [row...] [k=v ...]
   */
 object ProfileRow {
+  private def fmt(pattern: String, args: Any*): String =
+    String.format(Locale.ROOT, pattern, args.map(_.asInstanceOf[AnyRef]): _*)
+
   def main(args: Array[String]): Unit = {
-    require(args.length >= 2, "usage: ProfileRow <sfDir> <query> [query...]")
+    val (names, confs) = args.toSeq.drop(1).span(!_.contains("="))
+    require(args.nonEmpty && names.nonEmpty,
+      "usage: ProfileRow <sfDir> <row> [row...] [k=v ...]")
     val sfDir = args.head
-    val names = args.drop(1).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder0 = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.EliminateWindowPartitions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val spark = graft.GraftTmp.sparkLocalDir()
-      .fold(builder0)(d => builder0.config("spark.local.dir", d))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val starts = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()
-    @volatile var collect = false
-    val lines = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    // numeric durations collected alongside the formatted lines: the
-    // summary must not re-parse its own locale-formatted output
-    val durs = new java.util.concurrent.ConcurrentLinkedQueue[java.lang.Double]()
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = {
-        val desc = Option(j.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse("")
-        val stage = j.stageInfos.lastOption.map(_.name.takeWhile(_ != '\n')).getOrElse("")
-        starts.put(j.jobId, (System.nanoTime(), s"$stage | $desc".take(140)))
-      }
-      override def onJobEnd(e: SparkListenerJobEnd): Unit = {
-        Option(starts.remove(e.jobId)).foreach { case (t0, d) =>
-          if (collect) {
-            val ms = (System.nanoTime() - t0) / 1e6
-            durs.add(Double.box(ms))
-            lines.add(String.format(java.util.Locale.ROOT,
-              "[job %4d] %8.1f ms  %s", Int.box(e.jobId), Double.box(ms), d))
-          }
-        }
-      }
-    })
+    val spark = graft.Bench.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+    confs.foreach { kv =>
+      val Array(k, v) = kv.split("=", 2)
+      spark.conf.set(k, v)
+    }
+    val recorder = new RunRecorder(spark)
     try spark.read.parquet(s"$sfDir/documents.parquet").limit(1).count()
     catch { case _: Throwable => () }
     names.foreach { name =>
       val fn = graft.SparkEntry.queries.getOrElse(name,
         sys.error(s"unknown query '$name'"))
-      def run(label: String, doCollect: Boolean): Unit = {
-        collect = doCollect
-        lines.clear()
-        durs.clear()
+      def run(label: String): RunRecorder.RunStat = {
         spark.catalog.clearCache()
-        val t0 = System.nanoTime()
-        fn(spark, sfDir).queryExecution.toRdd.count(): Unit
-        val tot = (System.nanoTime() - t0) / 1e9
-        // drain listener events before printing (the bus is async)
-        Thread.sleep(500)
-        if (doCollect) {
-          lines.forEach(l => println(l))
-          val sumMs = durs.toArray(Array.empty[java.lang.Double])
-            .map(_.doubleValue).sum
-          // per-job walls overlap when jobs run concurrently, so the
-          // gaps figure is approximate (can go negative under overlap)
-          println(String.format(java.util.Locale.ROOT,
-            "  jobs total %.3f s (gaps ~= %.3f s driver/machinery; approximate under concurrent jobs)",
-            Double.box(sumMs / 1000), Double.box(tot - sumMs / 1000)))
-        }
-        println(String.format(java.util.Locale.ROOT,
-          "%s %s TOTAL %.3f s", name, label, Double.box(tot)))
+        val r = recorder.record(fn(spark, sfDir))
+        println(fmt("%s %s TOTAL %.3f s", name, label, r.wallMs / 1e3))
+        r
       }
-      run("warm", doCollect = false)
-      run("measure", doCollect = true)
+      run("warm")
+      val r = run("measure")
+      r.jobs.foreach { j =>
+        println(fmt("[job %4d] %8d ms %6d tasks  cpu %9.1f ms  %s",
+          j.id, j.wallMs, j.tasks, j.cpuMs, j.name))
+      }
+      def phase(p: String) = r.phasesMs.getOrElse(p, 0L)
+      println(fmt("  totals: analysis %d ms, optimization %d ms, planning %d ms | " +
+        "jobs %d, stages %d, tasks %d | executor run %d ms, cpu %.1f ms | " +
+        "read %d B, shuffle read %d B, shuffle write %d B, spill %d B | driver gap %d ms",
+        phase("analysis"), phase("optimization"), phase("planning"),
+        r.jobs.size, r.stages, r.tasks, r.executorRunMs, r.executorCpuMs,
+        r.bytesRead, r.shuffleReadBytes, r.shuffleWriteBytes, r.spillBytes, r.driverGapMs))
     }
     spark.stop()
     sys.exit(0)

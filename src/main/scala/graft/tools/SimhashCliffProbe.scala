@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Wall-clock demonstration of the simhash candidate-scheme cliff.
@@ -20,15 +19,7 @@ import org.apache.spark.sql.functions._
 object SimhashCliffProbe {
   def main(args: Array[String]): Unit = {
     val sizes = if (args.isEmpty) Seq(1000000L, 4000000L) else args.toSeq.map(_.toLong)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Bench.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
     sizes.foreach { n =>
       // doc 2k+1 duplicates doc 2k: true pairs = n/2, hamming 0.
       // Integer halving via id - id%2 (a bare id/2 is DOUBLE division

@@ -292,14 +292,9 @@ class EngineSpec extends SparkSpec {
     s1.startAsync("j2", eng, "event_type:error", T0, T31, chunkMs)
     // SIMULATED kill: let the run finish, then excise state back to the
     // guaranteed mid-flight shape a crash leaves (completion mark gone,
-    // >=1 chunk + marker missing). An in-JVM thread interrupt is NOT a
-    // faithful crash: shutdownNow() kills the submitter thread but its
-    // in-flight local-mode Spark write job survives and later commits a
-    // second part file into a chunk dir the resumed searcher already
-    // rewrote — fetchPartial then overcounts (observed: 56 rows / 28
-    // distinct in one chunk). A real crash kills the whole process and
-    // leaves no such orphan writer, which is exactly the state this
-    // excision constructs.
+    // >=1 chunk + marker missing). Where a real stop lands in the chunk
+    // loop is timing-dependent; the excision makes the resumed state
+    // deterministic.
     val cdl = System.currentTimeMillis() + 60000
     while (!s1.isComplete("j2") && System.currentTimeMillis() < cdl) Thread.sleep(50)
     assert(s1.isComplete("j2"))
@@ -360,18 +355,5 @@ class EngineSpec extends SparkSpec {
       Thread.sleep(100)
     assert(s2.isComplete("healthy"))
     s2.shutdown()
-  }
-
-  test("async search: start, await, fetch, restart-survivability") {
-    val dir = java.nio.file.Files.createTempDirectory("async").toString
-    val mgr = new AsyncSearchManager(spark, dir)
-    mgr.start("s1", eng.search(SearchRequest("event_type:error", T0, T31, size = 50)))
-    assert(mgr.await("s1", 60000) == mgr.Done)
-    assert(mgr.fetch("s1").get.count() == 50)
-    // a fresh manager over the same dir can still serve the result
-    val mgr2 = new AsyncSearchManager(spark, dir)
-    assert(mgr2.status("s1") == mgr2.Done)
-    assert(mgr2.fetch("s1").get.count() == 50)
-    mgr.shutdown(); mgr2.shutdown()
   }
 }

@@ -341,6 +341,31 @@ class EsFacadeSpec extends SparkSpec {
     } finally facade.stop()
   }
 
+  test("async search over HTTP: an open [0, Long.MaxValue] span with the default chunk_ms completes") {
+    // the span is clamped to the sink's time range before it is cut into
+    // day chunks; unclamped it would be ~10^14 chunks and never finish
+    val sinkA = java.nio.file.Files.createTempDirectory("graft_es_open").toString + "/docs"
+    val fc = new EsHttpFacade(spark, mapping, sinkA)
+    val port = fc.start()
+    try {
+      val ts = java.time.Instant.now().toString
+      assert(postTo(port, "/_bulk",
+        s"""{"timestamp":"$ts","service":"api","level":"error","message":"open span"}""" + "\n")
+        .statusCode() == 200)
+      assert(postTo(port, "/async_search/start",
+        s"""{"id":"open","query":"message:open","from":0,"to":${Long.MaxValue}}""")
+        .statusCode() == 200)
+      var body = ""
+      val deadline = System.currentTimeMillis() + 60000
+      while (!body.contains("\"status\":\"done\"") && System.currentTimeMillis() < deadline) {
+        body = postTo(port, "/async_search/fetch", """{"id":"open"}""").body()
+        if (!body.contains("\"status\":\"done\"")) Thread.sleep(200)
+      }
+      assert(body.contains("\"status\":\"done\""), body)
+      assert(body.contains("open span"), body)
+    } finally fc.stop()
+  }
+
   test("default mode: a root-level /_bulk append is visible to the next read") {
     val sinkB = java.nio.file.Files.createTempDirectory("graft_es_fresh").toString + "/docs"
     val fc = new EsHttpFacade(spark, mapping, sinkB)

@@ -431,6 +431,12 @@ class GrpcSeqApiSpec extends SparkSpec {
       assert(markers() >= 1, "no persisted progress to kill")
       started.searchId
     } finally { client1.close(); api1.stop() }
+    // stop() ends the search's in-flight chunk job, not just the thread
+    // that submitted it: no job of its group is still running
+    val st = spark.sparkContext.statusTracker
+    val live = st.getJobIdsForGroup(s"async-$id").filter(j =>
+      st.getJobInfo(j).exists(_.status == org.apache.spark.JobExecutionStatus.RUNNING))
+    assert(live.isEmpty, s"jobs of async-$id still running after stop(): ${live.mkString(",")}")
     // the kill races the chunk loop; when it lost (all 5 chunks
     // finished), reconstruct the exact mid-flight disk state a slower
     // kill leaves: completion mark gone, one chunk missing
