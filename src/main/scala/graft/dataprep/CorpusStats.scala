@@ -375,15 +375,6 @@ object CorpusStats {
     merges.toSeq
   }
 
-  /** The learned merge table as a frame: (rank, l, r, merged). */
-  def bpeMergesDf(df: DataFrame, textCol: String, nMerges: Int): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    bpeTrainMerges(df, textCol, nMerges).zipWithIndex
-      .map { case ((l, r), i) => (i + 1L, l, r, l + r) }
-      .toDF("rank", "l", "r", "merged")
-  }
-
   /** Apply a ranked merge list to the corpus: every word's char units
     * are folded through the merges in rank order (the BPE apply rule).
     * Output per doc: n_words, n_units (total subword count — the

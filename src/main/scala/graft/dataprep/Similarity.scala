@@ -18,11 +18,6 @@ object Similarity {
   def dot(a: Column, b: Column): Column =
     graft.functions.VectorExpressions.dotProduct(a, b)
 
-  /** HOF reference formulation of [[dot]] (kept for cross-checking the
-    * native expression in tests). */
-  def dotFold(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, x) => acc + x)
-
   def norm(a: Column): Column =
     sqrt(aggregate(transform(a, x => x * x), lit(0.0), (acc, x) => acc + x))
 
@@ -212,34 +207,12 @@ object Similarity {
       .orderBy(col("query_id"), col("rank"))
   }
 
-  /** Deterministic pseudo-random hyperplanes: component j of plane p is
-    * derived from xxhash64(p, j), mapped to [-0.5, 0.5). Expressed as
-    * columns so the whole signature stays inside codegen.
-    */
-  private def planeComponent(p: Column, j: Column): Column =
-    (pmod(xxhash64(p, j), lit(1000000L)).cast("double") / 1000000.0) - 0.5
-
   /** Random-hyperplane LSH bucket id: `nBits` sign bits of projections
     * onto deterministic hyperplanes (native kernel with plane cache —
     * graft.functions.LshBucketsExpr). Vectors in the same bucket are
     * near-collinear with high probability. */
   def lshBuckets(vec: Column, nBits: Int): Column =
     graft.functions.VectorExpressions.lshBuckets(vec, nBits)
-
-  /** HOF reference formulation of [[lshBuckets]] (kept for parity
-    * testing of the native kernel). */
-  def lshBucketsHof(vec: Column, nBits: Int): Column = {
-    val bits = transform(sequence(lit(0), lit(nBits - 1)), p => {
-      val proj = aggregate(
-        zip_with(vec, sequence(lit(0), size(vec) - 1), (x, j) => x * planeComponent(p, j)),
-        lit(0.0), (acc, x) => acc + x)
-      when(proj > 0, lit(1L)).otherwise(lit(0L))
-    })
-    aggregate(
-      zip_with(bits, sequence(lit(0), lit(nBits - 1)), (b, i) => call_function("shiftleft", b, i)),
-      lit(0L), (acc, x) => acc.bitwiseOR(x))
-  }
-
   /** Map-side argmin over DRIVER-HELD centroids: the centroid table is
     * KBs (nCells × dim doubles), so it rides along as one codegen
     * reference object (graft.functions.NearestCellsExpr) and cell

@@ -31,18 +31,6 @@ object TextPrep {
         i => concat(try_element_at(toks, i), lit(" "), try_element_at(toks, i + 1))),
       x => x.isNotNull))
 
-  /** Distinct character n-gram shingles. DuckDB mirror:
-    * list_distinct(list_transform(range(1, greatest(length(s)-n+2, 2)),
-    *   i -> substr(s, i, n)))
-    */
-  def charShingles(text: Column, n: Int): Column =
-    array_distinct(transform(
-      sequence(lit(1), greatest(length(text) - (n - 1), lit(1))),
-      i => substring(text, i, lit(n))))
-
-  private def substring(c: Column, pos: Column, len: Column): Column =
-    c.substr(pos, len)
-
   /** Split each document into overlapping fixed-token-budget chunks —
     * the context-window preprocessing step of a training pipeline
     * (long doc → N sequences of ≤ maxTokens tokens, consecutive chunks

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.model.{SeqMapping, SeqQlError}
-import graft.functions.Tokenizers
+import graft.functions.{BoundLongLiteral, Tokenizers}
 
 /** A queryable log table: the Spark-native stand-in for the reference's
   * fraction set (SURVEY.md §1.3). One row = one document.
@@ -38,10 +38,12 @@ final case class DocsTable(
   /** Pushdown-friendly time-range filter: the logical `mid` bound plus
     * the physical over-approximation (Parquet min/max + partition
     * pruning), plus a `date` partition-prune bound when the table is
-    * day-partitioned (SURVEY.md §1.3: fraction time pruning).
+    * day-partitioned (SURVEY.md §1.3: fraction time pruning). The `mid`
+    * bounds are [[BoundLongLiteral]]s, so a new window reuses the
+    * compiled classes of the last one with the same query shape.
     */
   def timeFilter(fromMs: Long, toMs: Long): Column = {
-    val base = col("mid").between(lit(fromMs), lit(toMs))
+    val base = col("mid").between(BoundLongLiteral.column(fromMs), BoundLongLiteral.column(toMs))
     val physical = timePredicate.map(f => f(fromMs, toMs))
     val partition =
       if (df.columns.contains("date")) {

@@ -1,6 +1,6 @@
 package graft.engine
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -196,11 +196,15 @@ final class SeqEngine(val table: DocsTable) extends Serializable {
     */
   def histogram(query: String, fromMs: Long, toMs: Long, intervalMs: Long): DataFrame = {
     require(intervalMs > 0, "histogram interval must be positive")
-    matches(query, fromMs, toMs)
-      .groupBy((mid - mid % lit(intervalMs)).as("bucket_ms"))
-      .agg(count(lit(1)).as("cnt"))
-      .orderBy(col("bucket_ms").asc)
+    histogramOver(matches(query, fromMs, toMs), intervalMs)
   }
+
+  /** Date histogram over an already-filtered match set (shared by
+    * [[histogram]], [[complexSearch]] and the async-search fetch). */
+  def histogramOver(m: DataFrame, intervalMs: Long): DataFrame =
+    SeqEngine.sortInOnePartition(
+      m.groupBy((mid - mid % lit(intervalMs)).as("bucket_ms")).agg(count(lit(1)).as("cnt")),
+      col("bucket_ms").asc)
 
   /** Aggregation (§2.4). Result columns:
     *   - `bucket_ms` when intervalMs > 0,
@@ -243,14 +247,6 @@ final class SeqEngine(val table: DocsTable) extends Serializable {
     def nameCol(field: String): Column =
       coalesce(groupCol.get.cast(StringType), lit("_not_exists")).as("name")
 
-    def valueCol(field: String): Column = {
-      table.fieldType(field) match {
-        case Some(DoubleType) | Some(FloatType) | Some(LongType) | Some(IntegerType) =>
-          table.fieldCol(field).cast(DoubleType)
-        case _ => table.fieldCol(field).try_cast(DoubleType)
-      }
-    }
-
     def groupCols(extra: Column*): Seq[Column] =
       (if (hasBucket) Seq(bucketCol) else Nil) ++ extra
 
@@ -267,17 +263,18 @@ final class SeqEngine(val table: DocsTable) extends Serializable {
       case AggFunc.Count =>
         val g = agg.groupBy.getOrElse(
           throw new SeqQlError("COUNT aggregation requires group_by"))
-        m.groupBy(groupCols(nameCol(g)): _*)
-          .agg(count(lit(1)).as("value"))
-          .orderBy(sortCols(valueFirstAsc = false, valueDesc = true): _*)
+        SeqEngine.sortInOnePartition(
+          m.groupBy(groupCols(nameCol(g)): _*).agg(count(lit(1)).as("value")),
+          sortCols(valueFirstAsc = false, valueDesc = true): _*)
 
       case AggFunc.Unique =>
         val g = agg.groupBy.getOrElse(
           throw new SeqQlError("UNIQUE aggregation requires group_by"))
-        m.where(groupCol.get.isNotNull)
-          .select(groupCols(groupCol.get.cast(StringType).as("name")): _*)
-          .distinct()
-          .orderBy((if (hasBucket) Seq(col("bucket_ms").asc) else Nil) :+ col("name").asc: _*)
+        SeqEngine.sortInOnePartition(
+          m.where(groupCol.get.isNotNull)
+            .select(groupCols(groupCol.get.cast(StringType).as("name")): _*)
+            .distinct(),
+          (if (hasBucket) Seq(col("bucket_ms").asc) else Nil) :+ col("name").asc: _*)
 
       case f @ (AggFunc.Sum | AggFunc.Min | AggFunc.Max | AggFunc.Avg) =>
         val v = valueCol(agg.field)
@@ -292,11 +289,10 @@ final class SeqEngine(val table: DocsTable) extends Serializable {
           case None    => m.groupBy(groupCols(): _*)
         }
         val out = grouped.agg(fn(v).as("value"))
-        val sorted =
-          if (agg.groupBy.isEmpty)
-            if (hasBucket) out.orderBy(col("bucket_ms").asc) else out
-          else out.orderBy(sortCols(valueFirstAsc = f == AggFunc.Min, valueDesc = f != AggFunc.Min): _*)
-        sorted
+        if (agg.groupBy.isEmpty)
+          if (hasBucket) SeqEngine.sortInOnePartition(out, col("bucket_ms").asc) else out
+        else SeqEngine.sortInOnePartition(out,
+          sortCols(valueFirstAsc = f == AggFunc.Min, valueDesc = f != AggFunc.Min): _*)
 
       case AggFunc.Quantile(qs) =>
         // Discrete quantile at rank round(q*(n-1)) over the sorted
@@ -320,6 +316,24 @@ final class SeqEngine(val table: DocsTable) extends Serializable {
           .select(keyNames.map(col) ++ Seq(col("q"), col("__v").as("value")): _*)
           .orderBy((keyNames.map(c => col(c).asc) :+ col("q").asc): _*)
     }
+  }
+
+  /** The value an aggregation reads from `field`, as a double. Numeric
+    * columns cast. Any other column parses with `try_cast`, and A3 strict
+    * semantics (frac/processor/aggregator.go:150-157: a token that does
+    * not parse as a number fails the whole query) are checked inside
+    * the aggregate itself: a present value that does not parse raises
+    * the query's error, so no separate precheck job runs. Collect with
+    * [[SeqEngine.collectStrict]] to surface it as a [[SeqQlError]].
+    */
+  private def valueCol(field: String): Column = table.fieldType(field) match {
+    case Some(DoubleType) | Some(FloatType) | Some(LongType) | Some(IntegerType) =>
+      table.fieldCol(field).cast(DoubleType)
+    case _ =>
+      val raw = table.fieldCol(field)
+      val parsed = raw.try_cast(DoubleType)
+      when(raw.isNotNull && parsed.isNull, raise_error(lit(SeqEngine.nonNumeric(field))))
+        .otherwise(parsed)
   }
 
   /** The (b, n, v, u) quantile input frame shared by the sketch path
@@ -346,11 +360,7 @@ final class SeqEngine(val table: DocsTable) extends Serializable {
         (m0, coalesce(table.fieldCol(g).cast(StringType), lit("_not_exists")))
       case None => (m0, lit(""))
     }
-    val v = table.fieldType(agg.field) match {
-      case Some(DoubleType) | Some(FloatType) | Some(LongType) | Some(IntegerType) =>
-        table.fieldCol(agg.field).cast(DoubleType)
-      case _ => table.fieldCol(agg.field).try_cast(DoubleType)
-    }
+    val v = valueCol(agg.field)
     val bucket = if (hasBucket) mid - mid % lit(agg.intervalMs) else lit(0L)
     m.select(bucket.as("b"), nameC.as("n"), v.as("v"),
       graft.functions.VectorExpressions.mix64(mid).bitwiseXOR(rid).as("u"))
@@ -474,8 +484,8 @@ final class SeqEngine(val table: DocsTable) extends Serializable {
       .withColumn("q", element_at(lit(qs.toArray), col("pos") + 1))
     val keyNames = (if (hasBucket) Seq("bucket_ms") else Nil) ++
       (if (agg.groupBy.isDefined) Seq("name") else Nil)
-    rows.select(keyNames.map(col) ++ Seq(col("q"), col("value")): _*)
-      .orderBy(keyNames.map(c => col(c).asc) :+ col("q").asc: _*)
+    SeqEngine.sortInOnePartition(rows.select(keyNames.map(col) ++ Seq(col("q"), col("value")): _*),
+      keyNames.map(c => col(c).asc) :+ col("q").asc: _*)
   }
 
   /** A2 UNIQUE cardinality via the deterministic KMV bottom-k sketch
@@ -514,7 +524,7 @@ final class SeqEngine(val table: DocsTable) extends Serializable {
       .agg(SeqAggregates.kmvAgg(k).toColumn)
       .map { case (b, est) => (b, est) }
       .toDF("bucket_ms", "est_unique")
-    if (hasBucket) rows.orderBy(col("bucket_ms").asc)
+    if (hasBucket) SeqEngine.sortInOnePartition(rows, col("bucket_ms").asc)
     else rows.select(col("est_unique"))
   }
 
@@ -535,7 +545,7 @@ final class SeqEngine(val table: DocsTable) extends Serializable {
       coarseMs: Long, fineMs: Long): DataFrame = {
     require(fineMs > 0 && coarseMs > fineMs && coarseMs % fineMs == 0,
       "need fineMs > 0 and coarseMs a multiple of fineMs")
-    matches(query, fromMs, toMs)
+    val bins = matches(query, fromMs, toMs)
       .select((mid - mid % lit(coarseMs)).as("bucket_coarse"),
         (mid - mid % lit(fineMs)).as("bucket_fine"))
       .rollup(col("bucket_coarse"), col("bucket_fine"))
@@ -545,13 +555,14 @@ final class SeqEngine(val table: DocsTable) extends Serializable {
       // mid is never null, so the only all-null row is the rollup's
       // grand total — not part of the histogram contract
       .where(col("__grand") === 0).drop("__grand")
-      .orderBy(col("bucket_coarse").asc, col("lvl").desc, col("bucket_fine").asc)
+    SeqEngine.sortInOnePartition(bins, col("bucket_coarse").asc, col("lvl").desc, col("bucket_fine").asc)
   }
 
-  /** A3 strict semantics: the reference fails the whole query when any
-    * token of the aggregated field doesn't parse as a number
-    * (frac/processor/aggregator.go:150-157). Spark's cast yields null
-    * instead, so this runs an explicit precheck action.
+  /** A3 strict semantics as a standalone precheck action: the
+    * reference fails the whole query when any token of the aggregated
+    * field doesn't parse as a number (frac/processor/aggregator.go:150-157).
+    * [[aggregate]] already enforces this inside the aggregate; this
+    * check is for callers that want the verdict without the rows.
     */
   def requireNumericField(query: String, fromMs: Long, toMs: Long, field: String): Unit = {
     table.fieldType(field) match {
@@ -562,7 +573,7 @@ final class SeqEngine(val table: DocsTable) extends Serializable {
             table.fieldCol(field).try_cast(DoubleType).isNull)
           .limit(1).count()
         if (bad > 0)
-          throw new SeqQlError(s"aggregation field '$field' has non-numeric values")
+          throw new SeqQlError(SeqEngine.nonNumeric(field))
     }
   }
 
@@ -588,10 +599,11 @@ final class SeqEngine(val table: DocsTable) extends Serializable {
   def aggregateFiltered(query: String, fromMs: Long, toMs: Long,
       groupBy: String, filterQuery: String): DataFrame = {
     val cond = compileFilter(filterQuery)
-    matches(query, fromMs, toMs)
-      .groupBy(coalesce(table.fieldCol(groupBy).cast(StringType), lit("_not_exists")).as("name"))
-      .agg(sum(when(cond, lit(1L)).otherwise(lit(0L))).as("value"))
-      .orderBy(col("value").desc, col("name").asc)
+    SeqEngine.sortInOnePartition(
+      matches(query, fromMs, toMs)
+        .groupBy(coalesce(table.fieldCol(groupBy).cast(StringType), lit("_not_exists")).as("name"))
+        .agg(sum(when(cond, lit(1L)).otherwise(lit(0L))).as("value")),
+      col("value").desc, col("name").asc)
   }
 
   /** ComplexSearch (§3.1): one request returning hits + total + any
@@ -615,11 +627,7 @@ final class SeqEngine(val table: DocsTable) extends Serializable {
     val hits = applyPipes(ordered.offset(req.offset).limit(req.size), compiled.pipes)
     val total = if (withTotal) Some(shared.count()) else None
     val aggResults = aggs.map(a => aggregateOver(shared, a))
-    val hist =
-      if (histIntervalMs > 0)
-        Some(shared.groupBy((mid - mid % lit(histIntervalMs)).as("bucket_ms"))
-          .agg(count(lit(1)).as("cnt")).orderBy(col("bucket_ms").asc))
-      else None
+    val hist = if (histIntervalMs > 0) Some(histogramOver(shared, histIntervalMs)) else None
     ComplexSearchResult(hits, total, aggResults, hist, shared)
   }
 
@@ -706,5 +714,36 @@ final class SeqEngine(val table: DocsTable) extends Serializable {
           d.select(keep.map(c => col(s"`$c`")) ++
             missing.map(c => lit(null).cast(StringType).as(c)): _*)
         }
+    }
+}
+
+object SeqEngine {
+  private[engine] def nonNumeric(field: String): String =
+    s"aggregation field '$field' has non-numeric values"
+
+  /** Sorts an aggregate's output inside one partition. A global
+    * `orderBy` plans a range exchange, whose RangePartitioner runs a
+    * sampling job and then a map job that each evaluate the final
+    * aggregate again; over one partition the sort needs no exchange.
+    * The bound: one task now holds every output row, and these rows are
+    * bucket- and group-capped (A7) and collected to the driver anyway.
+    * Never use it over raw match rows: `coalesce` is narrow, so it would
+    * pull the whole upstream stage into that one task.
+    */
+  private[graft] def sortInOnePartition(df: DataFrame, order: Column*): DataFrame =
+    df.coalesce(1).orderBy(order: _*)
+
+  /** Collects aggregation rows, rethrowing the strict-A3 failure that
+    * the aggregate raises (Spark's `USER_RAISED_EXCEPTION`) as the
+    * [[SeqQlError]] it stands for. */
+  def collectStrict(df: DataFrame): Array[Row] =
+    try df.collect()
+    catch {
+      case e: Throwable =>
+        val raised = Iterator.iterate(e)(_.getCause).takeWhile(_ != null).collectFirst {
+          case t: org.apache.spark.SparkThrowable if t.getCondition == "USER_RAISED_EXCEPTION" =>
+            t.getMessageParameters.get("errorMessage")
+        }
+        throw raised.map(new SeqQlError(_)).getOrElse(e)
     }
 }

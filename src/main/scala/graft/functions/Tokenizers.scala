@@ -22,12 +22,6 @@ object Tokenizers {
   def textTokens(value: Column, caseSensitive: Boolean): Column =
     TokenizeExpr.tokens(value, caseSensitive)
 
-  /** Regex formulation kept for cross-checking the native kernel. */
-  def textTokensRegex(value: Column, caseSensitive: Boolean): Column = {
-    val base = if (caseSensitive) value else lower(value)
-    filter(split(base, SepRegex), t => t =!= "")
-  }
-
   /** Scala-side tokenizer for ingest-time use (same semantics). */
   def tokenize(value: String, caseSensitive: Boolean): Seq[String] = {
     val base = if (caseSensitive) value else value.toLowerCase

@@ -231,6 +231,8 @@ final class EsHttpFacade(
   private val mRateLimited    = metrics.counter("rate_limited_total", "429-rejected requests")
   private val mBreakerOpen    = metrics.counter("breaker_open_total", "bulk requests shed by the open circuit")
   private val mTableOpens     = metrics.counter("table_opens_total", "default-mode sink resolutions (one per sink generation)")
+  metrics.sampledCounter("codegen_compiles_total", "classes compiled by Spark codegen in this JVM")(
+    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount)
   private val mBulkSeconds    = metrics.histogram("bulk_duration_seconds")
   private val mSearchSeconds  = metrics.histogram("search_duration_seconds")
 
@@ -432,14 +434,10 @@ final class EsHttpFacade(
       val agg = parseAgg(raw)
       if (!admitQueryKey(ex,
         s"agg|${req.query}|${agg.func}|${agg.field}|${agg.groupBy}|${agg.intervalMs}")) return
-      val eng = readEngine()
       // strict A3: a value-consuming agg over a non-numeric field fails
-      // the whole request (frac/processor/aggregator.go:150-157)
-      agg.func match {
-        case AggFunc.Count | AggFunc.Unique => ()
-        case _ => eng.requireNumericField(req.query, req.fromMs, req.toMs, agg.field)
-      }
-      val rows = rowsJson(eng.aggregate(req.query, req.fromMs, req.toMs, agg))
+      // the whole request (frac/processor/aggregator.go:150-157); the
+      // aggregate raises it and rowsJson's collect rethrows it
+      val rows = rowsJson(readEngine().aggregate(req.query, req.fromMs, req.toMs, agg))
       reply(ex, 200, s"""{"buckets":[$rows]}""")
     }
 
@@ -523,7 +521,7 @@ final class EsHttpFacade(
     * corpus-sized, so a driver-side collect is the intended shape. */
   private def rowsJson(df: org.apache.spark.sql.DataFrame): String = {
     val fields = df.schema.fields
-    df.collect().map { r =>
+    SeqEngine.collectStrict(df).map { r =>
       fields.indices.map { i =>
         val k = quote(fields(i).name)
         val v =

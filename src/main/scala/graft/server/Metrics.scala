@@ -13,11 +13,14 @@ import java.util.concurrent.atomic.{DoubleAdder, LongAdder}
   */
 final class Metrics(namespace: String) {
 
-  final class Counter private[Metrics] (val name: String, val help: String) {
+  /** A counter the registry either counts itself (`inc`) or, with a
+    * `read` hook, samples at render time from a count kept elsewhere. */
+  final class Counter private[Metrics] (val name: String, val help: String,
+      read: Option[() => Long] = None) {
     private[Metrics] val cell = new LongAdder
     def inc(): Unit = cell.increment()
     def inc(n: Long): Unit = cell.add(n)
-    def value: Long = cell.sum()
+    def value: Long = read.fold(cell.sum())(_())
   }
 
   /** Cumulative-bucket histogram over seconds, Prometheus semantics:
@@ -55,6 +58,11 @@ final class Metrics(namespace: String) {
 
   def counter(name: String, help: String = ""): Counter =
     counters.computeIfAbsent(s"${namespace}_$name", new Counter(_, help))
+
+  /** A counter read from `read` at render time (a count another
+    * component already keeps, e.g. Spark's codegen compiles). */
+  def sampledCounter(name: String, help: String)(read: => Long): Counter =
+    counters.computeIfAbsent(s"${namespace}_$name", new Counter(_, help, Some(() => read)))
 
   def histogram(name: String, help: String = "",
       buckets: Seq[Double] = Metrics.secondsBuckets): Histogram =

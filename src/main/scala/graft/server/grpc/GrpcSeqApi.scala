@@ -296,9 +296,20 @@ final class GrpcSeqApi(
     case _                       => Status.INTERNAL
   }
 
+  private val calls = new java.util.concurrent.atomic.AtomicLong
+
+  /** Runs one call under its own Spark job tag, `grpc-call-<n>`, so a
+    * SparkListener can attribute each job to the call that ran it. */
+  private def underCallTag(body: => Unit): Unit = {
+    val sc = spark.sparkContext
+    val tag = s"grpc-call-${calls.incrementAndGet()}"
+    sc.addJobTag(tag)
+    try body finally sc.removeJobTag(tag)
+  }
+
   private def unary[A, B](f: A => B): org.sparkproject.connect.grpc.ServerCallHandler[A, B] =
     ServerCalls.asyncUnaryCall(new ServerCalls.UnaryMethod[A, B] {
-      override def invoke(req: A, obs: StreamObserver[B]): Unit = {
+      override def invoke(req: A, obs: StreamObserver[B]): Unit = underCallTag {
         mRpcTotal.inc()
         val t0 = System.nanoTime()
         try { obs.onNext(f(req)); obs.onCompleted()
@@ -313,7 +324,7 @@ final class GrpcSeqApi(
 
   private def serverStream[A, B](f: (A, StreamObserver[B]) => Unit): org.sparkproject.connect.grpc.ServerCallHandler[A, B] =
     ServerCalls.asyncServerStreamingCall(new ServerCalls.ServerStreamingMethod[A, B] {
-      override def invoke(req: A, obs: StreamObserver[B]): Unit = {
+      override def invoke(req: A, obs: StreamObserver[B]): Unit = underCallTag {
         mRpcTotal.inc()
         val t0 = System.nanoTime()
         try { f(req, obs); obs.onCompleted()
@@ -441,14 +452,11 @@ final class GrpcSeqApi(
     }
   }
 
+  /** Strict A3 (a non-numeric value fails the request) is checked
+    * inside the aggregate; `collectStrict` surfaces it as SeqQlError. */
   private def runAgg(eng: SeqEngine, q: SearchQuery, a: PAggQuery): PAggregation = {
-    val agg = toAggRequest(a)
-    agg.func match {
-      case AggFunc.Count | AggFunc.Unique => ()
-      case _ => eng.requireNumericField(q.query, q.fromMs, q.toMs, agg.field)
-    }
-    val df = eng.aggregate(q.query, q.fromMs, q.toMs, agg)
-    toProtoAgg(df.collect(), df.schema, a)
+    val df = eng.aggregate(q.query, q.fromMs, q.toMs, toAggRequest(a))
+    toProtoAgg(SeqEngine.collectStrict(df), df.schema, a)
   }
 
   /** Serving-mode response memoization: a repeated identical request
@@ -688,14 +696,11 @@ final class GrpcSeqApi(
           else {
             val as = req.aggs.map { a =>
               val out = eng.aggregateOver(df, toAggRequest(a))
-              toProtoAgg(out.collect(), out.schema, a)
+              toProtoAgg(SeqEngine.collectStrict(out), out.schema, a)
             }
             val h = req.histInterval.filter(_.nonEmpty).map { iv =>
               val ms = graft.model.Intervals.parseMs(iv)
-              val rows = df
-                .groupBy((col("mid") - col("mid") % lit(ms)).as("bucket_ms"))
-                .agg(count(lit(1)).as("cnt")).orderBy(col("bucket_ms").asc)
-                .collect()
+              val rows = eng.histogramOver(df, ms).collect()
               PHistogram(rows.map(x => HistBucket(x.getLong(1), x.getLong(0))).toSeq)
             }
             asyncAggCache.put(r.searchId, (gen, as, h))

@@ -3,8 +3,8 @@ package graft.streaming
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Streaming analogues of the engine's histogram/time-series
-  * aggregations (H1/A5): the same bucket semantics computed
+/** Streaming analogues of the engine's time-series aggregations
+  * (A5): the same bucket semantics computed
   * incrementally over the live ingest stream with event-time
   * watermarking, instead of re-scanning the table. State is bounded by
   * the watermark: buckets older than the allowed lateness finalize and
@@ -17,17 +17,6 @@ import org.apache.spark.sql.functions._
   * ingested table remain the source of truth.
   */
 object LiveAggregates {
-
-  /** Live date histogram: per-interval doc counts over the projected
-    * doc stream (expects `mid` from [[graft.ingest.BulkIngest.project]]).
-    */
-  def liveHistogram(docs: DataFrame, intervalMs: Long, lateness: String): DataFrame =
-    docs
-      .withColumn("__ts", timestamp_millis(col("mid")))
-      .withWatermark("__ts", lateness)
-      .groupBy(window(col("__ts"), s"$intervalMs milliseconds"))
-      .agg(count(lit(1)).as("cnt"))
-      .select(unix_millis(col("window.start")).as("bucket_ms"), col("cnt"))
 
   /** Live grouped time-series count (A1 + A5 as a stream). */
   def liveCountByField(docs: DataFrame, field: String, intervalMs: Long, lateness: String): DataFrame =

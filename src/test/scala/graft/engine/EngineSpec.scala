@@ -177,6 +177,79 @@ class EngineSpec extends SparkSpec {
     eng.requireNumericField("*", T0, T31, "value")
   }
 
+  test("A3 strict mode inside the aggregate: a non-numeric value fails the collect") {
+    for (f <- Seq(AggFunc.Avg, AggFunc.Sum, AggFunc.Quantile(Seq(0.5)))) {
+      val e = intercept[graft.model.SeqQlError](SeqEngine.collectStrict(
+        eng.aggregate("*", T0, T31, AggRequest(f, field = "event_type", groupBy = Some("event_type")))))
+      assert(e.getMessage == "aggregation field 'event_type' has non-numeric values", f)
+    }
+    // a numeric-looking string field parses, like the precheck allows
+    val parsed = SeqEngine.collectStrict(eng.aggregate("*", T0, T31,
+      AggRequest(AggFunc.Max, field = "props.k"))).head.getDouble(0)
+    val ref = TestTables.eventsDocs(spark, sfDir).df
+      .where(col("mid").between(T0, T31))
+      .agg(max(col("props_k").cast("double"))).head.getDouble(0)
+    assert(parsed == ref)
+  }
+
+  /** A small day-partitioned table shaped like the serving sink: physical
+    * `mid` and `rid` longs, a keyword field, `date=` partitions. */
+  private lazy val sinkTable: DocsTable = {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_bound").toString + "/docs"
+    (0 until 3000).map(i => (T0 + i * 863917L, i.toLong, if (i % 3 == 0) "error" else "info"))
+      .toDF("mid", "rid", "level")
+      .withColumn("date", date_format(timestamp_millis(col("mid")), "yyyy-MM-dd"))
+      .write.partitionBy("date").parquet(dir)
+    DocsTable(spark.read.parquet(dir), SeqMapping.of("level" -> IndexType.Keyword))
+  }
+
+  private object Plans extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+
+  test("time bounds bind by reference: a new window compiles nothing and keeps Parquet pushdown") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    val e = new SeqEngine(sinkTable)
+    val day = 86400000L
+    def run(from: Long, to: Long): Unit = {
+      e.search(SearchRequest("level:error", from, to, size = 20)).collect()
+      e.histogram("level:error", from, to, 3600000L).collect()
+    }
+    run(T0 + day, T0 + 3 * day)
+    val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    run(T0 + 2 * day + 12345, T0 + 5 * day + 777)
+    assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount == compiled)
+
+    val (lo, hi) = (T0 + 2 * day + 12345, T0 + 5 * day + 777)
+    val df = e.search(SearchRequest("*", lo, hi, size = 5))
+    df.collect()
+    val scans = Plans.collect(df.queryExecution.executedPlan) { case s: FileSourceScanExec => s }
+    assert(scans.size == 1)
+    val pushed = scans.head.metadata("PushedFilters")
+    assert(pushed.contains(s"GreaterThanOrEqual(mid,$lo)") &&
+      pushed.contains(s"LessThanOrEqual(mid,$hi)"), pushed)
+    val partition = scans.head.metadata("PartitionFilters")
+    assert(partition.contains("2024-01-03") && partition.contains("2024-01-06"), partition)
+  }
+
+  test("bound-literal windows return the rows of plain literal bounds") {
+    val e = new SeqEngine(sinkTable)
+    val df = sinkTable.df
+    val mids = df.select("mid").collect().map(_.getLong(0)).sorted
+    val windows = Seq((0L, Long.MaxValue), (1L, 1000L), (mids(17), mids(2500)),
+      (mids(100) + 1, mids(100) + 2), (T0 + 86400000L, T0 + 2 * 86400000L - 1))
+    for ((lo, hi) <- windows) {
+      val ref = df.where(col("mid").between(lit(lo), lit(hi)) && col("level") === "error")
+      assert(e.matches("level:error", lo, hi).select("rid").collect().map(_.getLong(0)).sorted
+        .sameElements(ref.select("rid").collect().map(_.getLong(0)).sorted), (lo, hi))
+      val hist = e.histogram("level:error", lo, hi, 3600000L).collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toSeq
+      val refHist = ref.groupBy((col("mid") - col("mid") % 3600000L).as("b")).count()
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toSeq.sorted
+      assert(hist == refHist, (lo, hi))
+    }
+  }
+
   test("A7 cardinality cap rejects high-cardinality group_by") {
     assertThrows[graft.model.SeqQlError](
       eng.requireGroupCardinality("*", T0, T31, "event_id", maxGroupTokens = 100))

@@ -16,7 +16,7 @@ class VectorExpressionsSpec extends SparkSpec {
     val both = emb.crossJoin(q)
       .select(
         Similarity.dot(col("q"), col("v")).as("native"),
-        Similarity.dotFold(col("q"), col("v")).as("fold"))
+        ReferenceForms.dotFold(col("q"), col("v")).as("fold"))
       .where(col("native") =!= col("fold"))
     assert(both.count() == 0)
   }
@@ -95,7 +95,7 @@ class VectorExpressionsSpec extends SparkSpec {
       .select(col("embedding").cast("array<double>").as("v"))
     val diff = emb.select(
         Similarity.lshBuckets(col("v"), 12).as("fast"),
-        Similarity.lshBucketsHof(col("v"), 12).as("ref"))
+        ReferenceForms.lshBucketsHof(col("v"), 12).as("ref"))
       .where(col("fast") =!= col("ref"))
     assert(diff.count() == 0)
   }
@@ -104,14 +104,14 @@ class VectorExpressionsSpec extends SparkSpec {
     val docs = TestTables.documents(spark, "/root/testdata/sf0.01")
     val diff = docs.select(
         Tokenizers.textTokens(col("text"), caseSensitive = false).as("fast"),
-        Tokenizers.textTokensRegex(col("text"), caseSensitive = false).as("ref"))
+        ReferenceForms.textTokensRegex(col("text"), caseSensitive = false).as("ref"))
       .where(col("fast") =!= col("ref"))
     assert(diff.count() == 0)
     // edge cases: unicode, punctuation runs, empty, star/underscore
     val edge = Seq("Héllo,  Wörld!! x_y*z 42", "中文 test", "", "  ", "___", "a..b").toDF("t")
     val rows = edge.select(
       Tokenizers.textTokens(col("t"), caseSensitive = false).as("fast"),
-      Tokenizers.textTokensRegex(col("t"), caseSensitive = false).as("ref")).collect()
+      ReferenceForms.textTokensRegex(col("t"), caseSensitive = false).as("ref")).collect()
     rows.foreach(r => assert(r.getSeq[String](0) == r.getSeq[String](1), r))
   }
 

@@ -553,4 +553,59 @@ class GrpcSeqApiSpec extends SparkSpec {
       assert(opens() == 1)
     }
   }
+
+  test("default mode: a count, a histogram and an avg each run two Spark jobs; " +
+      "a non-numeric avg still fails INTERNAL") {
+    import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, TimeUnit}
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val m = mapping.copy(fields = mapping.fields ++
+      SeqMapping.of("latency" -> IndexType.Keyword).fields)
+    val sink = java.nio.file.Files.createTempDirectory("grpc_jobs").toString + "/docs"
+    BulkIngest.writePartitioned(BulkIngest.project(Seq(
+        """{"timestamp":"2024-03-10 09:00:00","level":"error","latency":"1.5"}""",
+        """{"timestamp":"2024-03-10 10:00:00","level":"info","latency":"2.5"}""",
+        """{"timestamp":"2024-03-11 11:00:00","level":"error","latency":"4"}""")
+      .toDF("value"), m, reqTime), sink)
+    // jobs per gRPC call, keyed by the call's job tag
+    val jobs = new ConcurrentHashMap[String, Integer]()
+    val fence = new ConcurrentHashMap[String, CountDownLatch]()
+    val sc = spark.sparkContext
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.tags")))
+          .toSeq.flatMap(_.split(",")).foreach { t =>
+            if (t.startsWith("grpc-call-")) jobs.merge(t, 1, (a, b) => a + b)
+            Option(fence.remove(t)).foreach(_.countDown())
+          }
+    }
+    sc.addSparkListener(listener)
+    // the job counts of the calls `body` makes, once the listener bus
+    // has delivered them (a fence job's start queues behind them)
+    def jobCounts(body: => Unit): Seq[Int] = {
+      jobs.clear()
+      body
+      val delivered = new CountDownLatch(1)
+      fence.put("spec-fence", delivered)
+      sc.addJobTag("spec-fence")
+      try sc.parallelize(Seq(0), 1).count() finally sc.removeJobTag("spec-fence")
+      assert(delivered.await(60, TimeUnit.SECONDS))
+      jobs.values.toArray.map(_.asInstanceOf[Integer].intValue).toSeq
+    }
+    try withDefaultApi(m, sink) { (_, client) =>
+      def agg(func: Int, field: String, from: Long) = client.getAggregation(
+        PGetAggregationRequest(SearchQuery("*", from, Long.MaxValue),
+          Seq(PAggQuery(field, if (func == 0) "level" else "", func, Nil, ""))))
+      // warm-up: the first call also opens the sink generation
+      agg(0, "", 0L)
+      assert(jobCounts(agg(0, "", 1L)) == Seq(2))
+      assert(jobCounts(client.getHistogram(
+        PGetHistogramRequest(SearchQuery("*", 2L, Long.MaxValue), "1h"))) == Seq(2))
+      var avg = 0.0
+      assert(jobCounts { avg = agg(4, "latency", 3L).aggs.head.buckets.head.value } == Seq(2))
+      assert(avg == (1.5 + 2.5 + 4) / 3)
+      val e = intercept[Exception](agg(4, "level", 4L))
+      assert(e.getMessage.startsWith("INTERNAL"), e.getMessage)
+      assert(e.getMessage.contains("aggregation field 'level' has non-numeric values"), e.getMessage)
+    } finally sc.removeSparkListener(listener)
+  }
 }

@@ -87,4 +87,39 @@ class MetricsSpec extends SparkSpec {
       assert(text.contains("seq_db_table_opens_total 1"), text)
     } finally srv.stop()
   }
+
+  test("codegen_compiles_total: a second window of one query shape compiles nothing") {
+    val mapping = SeqMapping.of("level" -> IndexType.Keyword)
+    val sink = java.nio.file.Files.createTempDirectory("graft_metrics_cg").toString + "/docs"
+    val srv = new EsHttpFacade(spark, mapping, sink)
+    srv.start()
+    try {
+      val client = HttpClient.newHttpClient()
+      def send(r: HttpRequest.Builder) = client.send(r.build(), HttpResponse.BodyHandlers.ofString())
+      def post(path: String, body: String) = send(HttpRequest.newBuilder(
+        URI.create(s"http://127.0.0.1:${srv.port}$path")).POST(HttpRequest.BodyPublishers.ofString(body)))
+      def compiles(): Long = {
+        val text = send(HttpRequest.newBuilder(
+          URI.create(s"http://127.0.0.1:${srv.port}/metrics")).GET()).body()
+        val line = text.linesIterator.find(_.startsWith("seq_db_codegen_compiles_total "))
+        assert(line.isDefined, text)
+        line.get.split(' ')(1).toLong
+      }
+      val now = System.currentTimeMillis()
+      assert(post("/_bulk", Seq(now - 7200000L, now - 3600000L, now).map(t =>
+        s"""{"timestamp":"${java.time.Instant.ofEpochMilli(t)}","level":"error"}""")
+        .mkString("", "\n", "\n")).statusCode() == 200)
+      def window(from: Long, to: Long): Unit = {
+        assert(post("/search",
+          s"""{"query":"level:error","from":$from,"to":$to,"size":10}""").statusCode() == 200)
+        assert(post("/histogram",
+          s"""{"query":"level:error","from":$from,"to":$to,"interval":"1h"}""").statusCode() == 200)
+      }
+      window(now - 86400000L, now + 1000L)
+      val warm = compiles()
+      assert(warm > 0)
+      window(now - 5400000L, now + 2000L)
+      assert(compiles() == warm)
+    } finally srv.stop()
+  }
 }
