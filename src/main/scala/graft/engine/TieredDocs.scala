@@ -134,7 +134,7 @@ object TieredDocs {
     val cached = if (targets.size > 1)
       docs.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     else docs
-    try targets.foreach(p => graft.ingest.BulkIngest.writePartitioned(cached, p))
+    try targets.foreach(p => graft.ingest.DocsWriter.overwrite(cached, p))
     finally if (targets.size > 1) { cached.unpersist(); () }
   }
 
@@ -149,10 +149,7 @@ object TieredDocs {
     val moved = fs.listStatus(base).toSeq.map(_.getPath)
       .filter(p => p.getName.startsWith("date=") && p.getName.stripPrefix("date=") < cutoffDay)
     moved.foreach { p =>
-      val day = p.getName
-      spark.read.parquet(p.toString)
-        .repartition(1).sortWithinPartitions(col("mid"), col("rid"))
-        .write.mode("overwrite").parquet(s"$coldPath/$day")
+      graft.ingest.DocsWriter.rewriteDay(spark, hotPath, coldPath, p.getName.stripPrefix("date="), 1)
       fs.delete(p, true)
     }
     moved.map(_.getName)

@@ -213,40 +213,6 @@ object BulkIngest {
     DocsTable(project(lines, mapping, requestTimeMs), mapping,
       columnOverrides = aliasFields(mapping))
 
-  /** Write the docs table in the at-scale layout: day-partitioned by
-    * event time (fraction pruning ≈ partition pruning, SURVEY.md §1.3),
-    * RANGE-partitioned by (date, mid) across tasks — hashing by date
-    * alone would funnel each whole day through one task, which dies at
-    * 100 TB; ranges keep writes parallel AND give every output file a
-    * tight disjoint mid range, so Parquet min/max stats prune time
-    * windows inside a day.
-    */
-  def writePartitioned(docs: DataFrame, path: String): Unit =
-    docs
-      // DateType, not a formatted string: the range exchange samples
-      // and the writer sort compare 4-byte days instead of strings
-      // (readers see DateType either way — partition-column inference)
-      .withColumn("date", to_date(timestamp_millis(col("mid"))))
-      .repartitionByRange(col("date"), col("mid"))
-      // sort prefixed by the partition column: FileFormatWriter then
-      // sees its required ordering satisfied and adds no extra
-      // (unstable, date-only) sort that could scramble mid order
-      .sortWithinPartitions(col("date"), col("mid"), col("rid"))
-      .write.mode("overwrite")
-      // zstd mirrors the reference's sealed-segment codec
-      // (frac/compress.go, --docs-zstd-compression-level) and writes
-      // ~2x faster than the snappy default on log-shaped data while
-      // compressing tighter — the right trade at archive scale.
-      // Level 1 (not the parquet default 3): on the write path CPU is
-      // the bottleneck, and log-shaped data compresses nearly as well
-      // at 1; a background compaction can re-encode colder segments
-      // tighter later (the reference makes the same split: fast active
-      // fraction, tighter sealed segments).
-      .option("compression", "zstd")
-      .option("parquet.compression.codec.zstd.level", "1")
-      .partitionBy("date")
-      .parquet(path)
-
   /** End-to-end ingest in the at-scale order: stamp thin (mid, rid,
     * _raw) rows, exchange + sort THOSE (a fraction of the bytes the
     * projected table would move through the shuffle), then run the
@@ -272,21 +238,12 @@ object BulkIngest {
       path: String,
       allowedDriftMs: Long = 24L * 3600 * 1000,
       futureDriftMs: Long = 5L * 60 * 1000): Unit = {
-    val staged = stamp(lines, requestTimeMs, allowedDriftMs, futureDriftMs)
-      .withColumn("date", to_date(timestamp_millis(col("mid"))))
-      .repartitionByRange(col("date"), col("mid"))
-      .sortWithinPartitions(col("date"), col("mid"), col("rid"))
+    val staged = DocsWriter.cluster(stamp(lines, requestTimeMs, allowedDriftMs, futureDriftMs))
     // 'date' is passed through expand (same attribute), so the sort
     // above satisfies the writer's required (date) ordering and
     // FileFormatWriter inserts no extra date-only sort — which would
     // cost a second sort AND, being non-stable on (mid, rid), could
     // scramble the in-file clustering
-    expand(staged, mapping, extraCols = Seq("date"))
-      .write.mode("overwrite")
-      .option("compression", "zstd")
-      // level 1: write-path CPU trade, see writePartitioned
-      .option("parquet.compression.codec.zstd.level", "1")
-      .partitionBy("date")
-      .parquet(path)
+    DocsWriter.overwriteClustered(expand(staged, mapping, extraCols = Seq("date")), path)
   }
 }

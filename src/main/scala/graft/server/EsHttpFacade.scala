@@ -10,7 +10,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.engine.{AggFunc, AggRequest, ChunkedAsyncSearcher, DocsTable, SearchRequest, SeqEngine, SinkGeneration}
-import graft.ingest.BulkIngest
+import graft.ingest.{BulkIngest, DocsWriter}
 import graft.model.SeqMapping
 
 /** Request admission limits (docs/en/08-rate-limiting.md,
@@ -104,7 +104,7 @@ final class EsHttpFacade(
     // an inflight cap is configured — shedding only means something if
     // requests can actually overlap. Parquet appends stay serialized
     // via bulkLock regardless (concurrent appends to one sink path
-    // would race in the _temporary staging dir).
+    // would race over the root-file move and the _staging directory).
     if (limits.maxInflight > 0)
       server.setExecutor(java.util.concurrent.Executors.newFixedThreadPool(limits.maxInflight + 2))
     else server.setExecutor(null)
@@ -369,8 +369,9 @@ final class EsHttpFacade(
       val nActions = lines.count(l => actionRe.findFirstIn(l).isEmpty)
       try bulkBreaker.run {
         bulkLock.synchronized {
-          BulkIngest.project(df, currentMapping, requestTimeMs = System.currentTimeMillis())
-            .write.mode("append").parquet(sinkDir)
+          DocsWriter.append(
+            BulkIngest.project(df, currentMapping, requestTimeMs = System.currentTimeMillis()),
+            sinkDir, "bulk" + java.util.UUID.randomUUID().toString.replace("-", ""))
         }
       } catch {
         case _: bulkBreaker.CircuitOpenException =>

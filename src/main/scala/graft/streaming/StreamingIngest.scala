@@ -1,10 +1,10 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.execution.streaming.runtime.StreamExecution
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-import graft.ingest.BulkIngest
+import graft.ingest.{BulkIngest, DocsWriter}
 import graft.model.SeqMapping
 
 /** Structured Streaming stand-in for the reference's active-fraction
@@ -19,7 +19,8 @@ import graft.model.SeqMapping
 object StreamingIngest {
 
   /** Start appending `lines` (a streaming DataFrame with a string
-    * `value` column) into `outPath` as day-partitioned parquet.
+    * `value` column) into `outPath`, one [[DocsWriter.append]] per
+    * epoch.
     * `requestTimeMs` supplies the deterministic "arrival time" for
     * drift clamping in tests; pass None for wall clock per batch.
     */
@@ -42,16 +43,19 @@ object StreamingIngest {
     lines.writeStream
       .trigger(Trigger.ProcessingTime(triggerMs))
       .option("checkpointLocation", checkpointPath)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val reqTime = requestTimeMs.getOrElse(System.currentTimeMillis())
-        val docs = BulkIngest.project(batch, mapping, reqTime)
-        docs
-          .withColumn("date", to_date(timestamp_millis(col("mid"))))
-          .write.mode("append").partitionBy("date").parquet(outPath)
-        // advisory-only index maintenance MUST NOT fail the epoch: the
-        // parquet append above is not idempotent, so a failure here
-        // would replay the batch and duplicate its rows. Unindexed
-        // files are merely unprunable until the next catch-up.
+        // the append id names the query (its id survives restarts from
+        // this checkpoint) and the epoch: a replayed epoch replaces its
+        // own files, and another query's epoch of the same number
+        // touches none of them
+        val query = batch.sparkSession.sparkContext
+          .getLocalProperty(StreamExecution.QUERY_ID_KEY).replace("-", "")
+        DocsWriter.append(BulkIngest.project(batch, mapping, reqTime), outPath, s"${query}e$batchId")
+        // advisory-only index maintenance does not fail the epoch: the
+        // append above is idempotent per epoch, but an index outage must
+        // not stall ingest. Unindexed files are merely unprunable until
+        // the next catch-up.
         if (bloomFields.nonEmpty)
           try graft.index.TokenBloomIndex.update(
             batch.sparkSession, outPath, mapping, bloomFields)
@@ -69,13 +73,6 @@ object StreamingIngest {
       .start()
   }
 
-  /** Read back the streamed docs table (base path, partition-pruned by
-    * the `date` column on time filters). Fresh micro-batch files are
-    * visible immediately — the "active fraction is queryable before
-    * sealing" property (T3). */
-  def readDocs(spark: SparkSession, outPath: String): DataFrame =
-    spark.read.option("basePath", outPath).parquet(outPath)
-
   /** Compaction: the streaming append produces many small files per
     * day (active fraction); re-sort and rewrite a day partition into
     * few large files sorted by (mid, rid) — the "sealing" analogue
@@ -90,20 +87,7 @@ object StreamingIngest {
       targetFiles: Int = 1, bloomFields: Seq[String] = Nil,
       mapping: Option[SeqMapping] = None,
       zoneCols: Seq[String] = Nil): Unit = {
-    val day = spark.read.parquet(s"$outPath/date=$date")
-    // range-partition by mid so compacted files carry disjoint time
-    // ranges (tight min/max stats), not random row hashes
-    day.repartitionByRange(targetFiles, col("mid"), col("rid"))
-      .sortWithinPartitions(col("mid"), col("rid"))
-      .write.mode("overwrite")
-      .parquet(s"$outPath/.compact_tmp_$date")
-    // atomic-ish swap (single filesystem): replace the day directory
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    val dayPath = new org.apache.hadoop.fs.Path(s"$outPath/date=$date")
-    val tmpPath = new org.apache.hadoop.fs.Path(s"$outPath/.compact_tmp_$date")
-    fs.delete(dayPath, true)
-    fs.rename(tmpPath, dayPath)
+    DocsWriter.rewriteDay(spark, outPath, outPath, date, targetFiles)
     if (bloomFields.nonEmpty) {
       require(mapping.isDefined, "compactDay bloom update needs the mapping")
       graft.index.TokenBloomIndex.update(spark, outPath, mapping.get, bloomFields)

@@ -9,8 +9,8 @@ import org.apache.spark.sql.functions._
   * over `.index` files) and `cmd/distribution` (per-fraction MID
   * distribution): for a day-partitioned docs sink it reports, per
   * file and per day, row counts, MID ranges and their TIGHTNESS.
-  * The ingest writer claims every output file carries a tight
-  * disjoint (date, mid) range (BulkIngest.writePartitioned's
+  * The initial load claims every output file carries a tight
+  * disjoint (date, mid) range (graft.ingest.DocsWriter.cluster's
   * repartitionByRange + sortWithinPartitions); `overlapping_files`
   * measures that claim on real data — a nonzero count means time
   * windows inside a day stop pruning at the file level, the exact

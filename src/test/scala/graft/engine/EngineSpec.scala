@@ -310,7 +310,7 @@ class EngineSpec extends SparkSpec {
       """{"timestamp":"2024-03-10 09:00:00","level":"error"}""",
       """{"timestamp":"2024-03-09 13:00:00","level":"info"}""") // 23h back, within drift
     val dir = java.nio.file.Files.createTempDirectory("hints").toString
-    graft.ingest.BulkIngest.writePartitioned(
+    graft.ingest.DocsWriter.overwrite(
       graft.ingest.BulkIngest.project(lines.toDF("value"), mapping, 1710072000000L), dir)
     val t = DocsTable(spark.read.parquet(dir), mapping)
     val e = new SeqEngine(t)

@@ -3,7 +3,7 @@ package graft.engine
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
-import graft.ingest.BulkIngest
+import graft.ingest.{BulkIngest, DocsWriter}
 import graft.model.{IndexType, SeqMapping}
 import graft.streaming.StreamingIngest
 
@@ -53,13 +53,13 @@ class TableStatesSpec extends SparkSpec {
     val expected =
       try {
         lines.foreach { l => mem.addData(l); q.processAllAvailable() } // one batch per line
-        val active = new SeqEngine(DocsTable(StreamingIngest.readDocs(spark, out), mapping))
+        val active = new SeqEngine(DocsTable(SinkGeneration.open(spark, out), mapping))
         results(active)
       } finally q.stop()
 
     // sealed: compact each day, re-check
     Seq("2024-03-09", "2024-03-10").foreach(d => StreamingIngest.compactDay(spark, out, d))
-    val sealed_ = new SeqEngine(DocsTable(StreamingIngest.readDocs(spark, out), mapping))
+    val sealed_ = new SeqEngine(DocsTable(SinkGeneration.open(spark, out), mapping))
     assert(results(sealed_) == expected)
 
     // restarted: a brand-new read over the same files
@@ -70,7 +70,7 @@ class TableStatesSpec extends SparkSpec {
     // batch-written equivalent of the same docs agrees too
     val batch = BulkIngest.project(lines.toDF("value"), mapping, reqTime)
     val tmp = java.nio.file.Files.createTempDirectory("states_batch").toString
-    BulkIngest.writePartitioned(batch, tmp)
+    DocsWriter.overwrite(batch, tmp)
     val batchEng = new SeqEngine(DocsTable(spark.read.parquet(tmp), mapping))
     assert(results(batchEng) == expected)
   }
@@ -79,13 +79,15 @@ class TableStatesSpec extends SparkSpec {
     val out = java.nio.file.Files.createTempDirectory("tier_hot").toString
     val cold = java.nio.file.Files.createTempDirectory("tier_cold").toString
     val batch = BulkIngest.project(lines.toDF("value"), mapping, reqTime)
-    BulkIngest.writePartitioned(batch, out)
+    DocsWriter.overwrite(batch, out)
     val single = results(new SeqEngine(DocsTable(spark.read.parquet(out), mapping)))
 
     // migrate the old day to cold; boundary = 2024-03-10T00:00Z
     val boundary = 1710028800000L
     val moved = TieredDocs.migrate(spark, out, cold, boundary)
     assert(moved == Seq("date=2024-03-09"))
+    val coldFiles = new java.io.File(s"$cold/date=2024-03-09").list().filter(_.endsWith(".parquet"))
+    assert(coldFiles.nonEmpty && coldFiles.forall(_.endsWith(".zstd.parquet")))
     val tiered = new SeqEngine(TieredDocs.table(spark, out, cold, boundary, mapping))
     assert(results(tiered) == single)
 
@@ -118,7 +120,7 @@ class TableStatesSpec extends SparkSpec {
     val stores = TieredDocs.StoreLists(hot = Seq(hot), cold = Seq(cold))
     TieredDocs.dualWrite(batch, stores)
     val singlePath = tmp("sl_single")
-    BulkIngest.writePartitioned(batch, singlePath)
+    DocsWriter.overwrite(batch, singlePath)
     val single = results(new SeqEngine(DocsTable(spark.read.parquet(singlePath), mapping)))
     assert(results(new SeqEngine(
       TieredDocs.tableFromLists(spark, stores, boundary, mapping))) == single)
@@ -130,8 +132,8 @@ class TableStatesSpec extends SparkSpec {
     // sharded hot tier: two stores each holding half the batch answer
     // like one store holding all of it
     val (h1, h2) = (tmp("sl_h1"), tmp("sl_h2"))
-    BulkIngest.writePartitioned(batch.where(col("rid") % 2 === 0), h1)
-    BulkIngest.writePartitioned(batch.where(col("rid") % 2 =!= 0), h2)
+    DocsWriter.overwrite(batch.where(col("rid") % 2 === 0), h1)
+    DocsWriter.overwrite(batch.where(col("rid") % 2 =!= 0), h2)
     assert(results(new SeqEngine(TieredDocs.tableFromLists(
       spark, TieredDocs.StoreLists(hot = Seq(h1, h2)), boundary, mapping))) == single)
 
@@ -141,12 +143,12 @@ class TableStatesSpec extends SparkSpec {
     // without failing writes), then visible again once the read list
     // is dropped
     val hotReadCopy = tmp("sl_hot_read")
-    BulkIngest.writePartitioned(spark.read.parquet(hot), hotReadCopy)
+    DocsWriter.overwrite(spark.read.parquet(hot), hotReadCopy)
     val extra = BulkIngest.project(Seq(
       """{"timestamp":"2024-03-10 11:30:00","level":"error","message":"disk new"}"""
     ).toDF("value"), mapping, reqTime)
     val hotV2 = tmp("sl_hot_v2") // the regular store after the new write lands
-    BulkIngest.writePartitioned(
+    DocsWriter.overwrite(
       spark.read.parquet(hot).unionByName(extra, allowMissingColumns = true), hotV2)
     val migrating = TieredDocs.StoreLists(
       hot = Seq(hotV2), cold = Seq(cold), hotRead = Seq(hotReadCopy))

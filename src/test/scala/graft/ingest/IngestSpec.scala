@@ -3,7 +3,7 @@ package graft.ingest
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import graft.SparkSpec
-import graft.engine.{SearchRequest, SeqEngine}
+import graft.engine.{SearchRequest, SeqEngine, SinkGeneration}
 import graft.model.{IndexType, SeqMapping}
 import graft.streaming.StreamingIngest
 
@@ -115,7 +115,7 @@ class IngestSpec extends SparkSpec {
       """{"timestamp":"2024-03-10 02:00:00","level":"b"}""",
       """{"timestamp":"2024-03-09 23:00:00","level":"c"}""",
     ), mapping, 1710072000000L, allowedDriftMs = 48L * 3600 * 1000)
-    BulkIngest.writePartitioned(docs, tmp)
+    DocsWriter.overwrite(docs, tmp)
     val fs = new java.io.File(tmp).list().filter(_.startsWith("date=")).sorted
     assert(fs.toSeq == Seq("date=2024-03-09", "date=2024-03-10"))
     val back = spark.read.parquet(tmp)
@@ -183,10 +183,10 @@ class IngestSpec extends SparkSpec {
       mem.addData("""{"timestamp":"2024-03-10 10:00:00","level":"s1","message":"hello world"}""")
       q.processAllAvailable()
       // visible mid-stream (active-fraction analogue, T3)
-      assert(StreamingIngest.readDocs(spark, out).count() == 1)
+      assert(SinkGeneration.open(spark, out).count() == 1)
       mem.addData("""{"timestamp":"2024-03-10 10:01:00","level":"s2","message":"second"}""")
       q.processAllAvailable()
-      val docs = StreamingIngest.readDocs(spark, out)
+      val docs = SinkGeneration.open(spark, out)
       assert(docs.count() == 2)
       // queryable through the engine
       val t = graft.engine.DocsTable(docs, mapping)
@@ -196,9 +196,28 @@ class IngestSpec extends SparkSpec {
       val compacted = spark.read.parquet(s"$out/date=2024-03-10")
       assert(compacted.count() == 2)
       assert(new java.io.File(s"$out/date=2024-03-10").list().count(_.endsWith(".parquet")) == 1)
+      assert(new java.io.File(s"$out/date=2024-03-10").list().filter(_.endsWith(".parquet"))
+        .forall(_.endsWith(".zstd.parquet")))
       // retention drops old days
       val dropped = StreamingIngest.enforceRetention(spark, out, reqTime + 40L * 86400000, 30)
       assert(dropped == Seq("date=2024-03-10"))
     } finally q.stop()
+  }
+
+  test("append: a replayed id replaces its own files on every day, other ids stay") {
+    val out = java.nio.file.Files.createTempDirectory("docs_append").toString
+    def docs(ts: String*) = BulkIngest.project(linesDf(ts.map(t =>
+      s"""{"timestamp":"$t","level":"x","message":"m $t"}"""): _*), mapping, reqTime,
+      allowedDriftMs = 48L * 3600 * 1000)
+    def mids(): Seq[Long] = SinkGeneration.open(spark, out).select("mid").collect().map(_.getLong(0)).sorted.toSeq
+    DocsWriter.append(docs("2024-03-10 01:00:00"), out, "a")
+    DocsWriter.append(docs("2024-03-09 01:00:00", "2024-03-10 02:00:00"), out, "b")
+    assert(mids().size == 3)
+    // the replay of "b" lands on 2024-03-10 only (as a wall-clock
+    // restamp would move it): its earlier 2024-03-09 file must go too
+    DocsWriter.append(docs("2024-03-10 03:00:00"), out, "b")
+    assert(mids() == Seq(1710032400000L, 1710039600000L)) // 01:00 and 03:00 on 2024-03-10
+    assert(!new java.io.File(out, "date=2024-03-09").list().exists(_.endsWith(".parquet")))
+    assert(!new java.io.File(out, "_staging").exists())
   }
 }

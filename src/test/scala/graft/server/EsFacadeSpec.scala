@@ -4,10 +4,9 @@ import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.functions.{col, timestamp_millis, to_date}
 
 import graft.SparkSpec
-import graft.ingest.BulkIngest
+import graft.ingest.{BulkIngest, DocsWriter}
 import graft.model.{IndexType, SeqMapping}
 
 class EsFacadeSpec extends SparkSpec {
@@ -366,7 +365,7 @@ class EsFacadeSpec extends SparkSpec {
     } finally fc.stop()
   }
 
-  test("default mode: a root-level /_bulk append is visible to the next read") {
+  test("default mode: a /_bulk append is visible to the next read") {
     val sinkB = java.nio.file.Files.createTempDirectory("graft_es_fresh").toString + "/docs"
     val fc = new EsHttpFacade(spark, mapping, sinkB)
     val port = fc.start()
@@ -388,7 +387,7 @@ class EsFacadeSpec extends SparkSpec {
   test("default mode: a file appended into an existing date= partition is visible") {
     val sinkP = java.nio.file.Files.createTempDirectory("graft_es_part").toString + "/docs"
     val reqTime = 1710072000000L // 2024-03-10T12:00Z
-    BulkIngest.writePartitioned(BulkIngest.project(Seq(
+    DocsWriter.overwrite(BulkIngest.project(Seq(
       """{"timestamp":"2024-03-10 09:00:00","service":"api","level":"error","message":"a"}""",
       """{"timestamp":"2024-03-09 15:00:00","service":"api","level":"error","message":"b"}""",
     ).toDF("value"), mapping, reqTime), sinkP)
@@ -396,17 +395,58 @@ class EsFacadeSpec extends SparkSpec {
     val port = fc.start()
     try {
       assert(searchTotal(port, "level:error") == 2)
-      // the day-partitioned append the streaming sink does
-      BulkIngest.project(Seq(
+      // the day-partitioned append every ingest path makes
+      DocsWriter.append(BulkIngest.project(Seq(
           """{"timestamp":"2024-03-10 10:00:00","service":"db","level":"error","message":"c"}""")
-          .toDF("value"), mapping, reqTime)
-        .withColumn("date", to_date(timestamp_millis(col("mid"))))
-        .write.mode("append").partitionBy("date").parquet(sinkP)
+          .toDF("value"), mapping, reqTime), sinkP, "t1")
       assert(new java.io.File(sinkP, "date=2024-03-10").listFiles()
         .count(_.getName.endsWith(".parquet")) == 2)
       assert(searchTotal(port, "level:error") == 3)
       assert(searchTotal(port, "service:db") == 1)
     } finally fc.stop()
+  }
+
+  test("/_bulk on a sink from the initial load is visible to the next search, default and serving") {
+    val sinkL = java.nio.file.Files.createTempDirectory("graft_es_load").toString + "/docs"
+    val now = System.currentTimeMillis()
+    def doc(msg: String, atMs: Long): String =
+      s"""{"timestamp":"${java.time.Instant.ofEpochMilli(atMs)}","service":"api","level":"error","message":"$msg"}"""
+    BulkIngest.ingestPartitioned(Seq(doc("loaded", now - 3600000L)).toDF("value"), mapping,
+      requestTimeMs = now, path = sinkL)
+    for (serving <- Seq(false, true)) {
+      val fc = new EsHttpFacade(spark, mapping, sinkL, serving = serving)
+      val port = fc.start()
+      try {
+        val before = searchTotal(port, "level:error")
+        assert(postTo(port, "/_bulk", doc(s"bulk $serving", now) + "\n").statusCode() == 200)
+        // serving mode re-probes the sink at most once per second
+        if (serving) Thread.sleep(1100)
+        assert(searchTotal(port, "level:error") == before + 1, s"serving=$serving")
+        assert(searchTotal(port, s"message:$serving") == 1, s"serving=$serving")
+      } finally fc.stop()
+    }
+    assert(!new java.io.File(sinkL).listFiles().exists(f => f.isFile && f.getName.endsWith(".parquet")))
+  }
+
+  test("/_bulk on a sink of root-level files keeps every old row readable") {
+    val sinkO = java.nio.file.Files.createTempDirectory("graft_es_legacy").toString + "/docs"
+    val ts = java.time.Instant.now().toString
+    def doc(msg: String): String =
+      s"""{"timestamp":"$ts","service":"api","level":"error","message":"$msg"}"""
+    // the unpartitioned layout earlier /_bulk requests wrote
+    for (msg <- Seq("old one", "old two", "old three"))
+      BulkIngest.project(Seq(doc(msg)).toDF("value"), mapping, requestTimeMs = System.currentTimeMillis())
+        .write.mode("append").parquet(sinkO)
+    val fc = new EsHttpFacade(spark, mapping, sinkO)
+    val port = fc.start()
+    try {
+      assert(searchTotal(port, "level:error") == 3)
+      assert(postTo(port, "/_bulk", doc("new") + "\n").statusCode() == 200)
+      assert(searchTotal(port, "level:error") == 4)
+      assert(searchTotal(port, "message:old") == 3)
+      assert(searchTotal(port, "message:new") == 1)
+    } finally fc.stop()
+    assert(!new java.io.File(sinkO).listFiles().exists(f => f.isFile && f.getName.endsWith(".parquet")))
   }
 
   test("default mode: the sink is resolved once per generation and again after an append") {

@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions.{col, timestamp_millis, to_date}
 
 import graft.SparkSpec
 import graft.engine.DocsTable
-import graft.ingest.BulkIngest
+import graft.ingest.{BulkIngest, DocsWriter}
 import graft.model.{IndexType, SeqMapping}
 import graft.server.grpc._
 import graft.server.grpc.SeqProxyProto._
@@ -31,7 +31,7 @@ class GrpcSeqApiSpec extends SparkSpec {
 
   private lazy val tableDir = {
     val dir = java.nio.file.Files.createTempDirectory("grpc_docs").toString
-    BulkIngest.writePartitioned(
+    DocsWriter.overwrite(
       BulkIngest.project(lines.toDF("value"), mapping, reqTime), dir)
     dir
   }
@@ -409,7 +409,7 @@ class GrpcSeqApiSpec extends SparkSpec {
       s"""{"timestamp":"2024-03-$d 09:00:00","level":"error","message":"boom day$d"}""",
       s"""{"timestamp":"2024-03-$d 10:00:00","level":"info","message":"fine day$d"}"""))
     val tdir = NF.createTempDirectory("grpc_restart_docs").toString
-    BulkIngest.writePartitioned(BulkIngest.project(rlines.toDF("value"), mapping,
+    DocsWriter.overwrite(BulkIngest.project(rlines.toDF("value"), mapping,
       requestTimeMs = 1710460800000L, allowedDriftMs = 10L * 86400000), tdir)
     val asyncDir = NF.createTempDirectory("grpc_restart").toString
     val q = SearchQuery("level:error", 0L, Long.MaxValue)
@@ -500,7 +500,7 @@ class GrpcSeqApiSpec extends SparkSpec {
 
   test("default mode: a file carrying a new column appears in the union schema") {
     val sink = java.nio.file.Files.createTempDirectory("grpc_newcol").toString + "/docs"
-    BulkIngest.writePartitioned(
+    DocsWriter.overwrite(
       BulkIngest.project(lines.toDF("value"), mapping, reqTime), sink)
     val wide = mapping.copy(fields = mapping.fields ++
       SeqMapping.of("region" -> IndexType.Keyword).fields)
@@ -520,7 +520,7 @@ class GrpcSeqApiSpec extends SparkSpec {
 
   test("default mode: a deleted date= partition neither fails the next read nor still counts") {
     val sink = java.nio.file.Files.createTempDirectory("grpc_dropday").toString + "/docs"
-    BulkIngest.writePartitioned(BulkIngest.project((lines :+
+    DocsWriter.overwrite(BulkIngest.project((lines :+
         """{"timestamp":"2024-03-09 15:00:00","level":"error","message":"old day"}""")
       .toDF("value"), mapping, reqTime), sink)
     withDefaultApi(mapping, sink) { (facade, client) =>
@@ -536,7 +536,7 @@ class GrpcSeqApiSpec extends SparkSpec {
 
   test("default mode: gRPC handlers reuse the facade's resolved table while the sink is unchanged") {
     val sink = java.nio.file.Files.createTempDirectory("grpc_reuse").toString + "/docs"
-    BulkIngest.writePartitioned(
+    DocsWriter.overwrite(
       BulkIngest.project(lines.toDF("value"), mapping, reqTime), sink)
     withDefaultApi(mapping, sink) { (facade, client) =>
       def opens(): Long = facade.metrics.counter("table_opens_total").value
@@ -561,7 +561,7 @@ class GrpcSeqApiSpec extends SparkSpec {
     val m = mapping.copy(fields = mapping.fields ++
       SeqMapping.of("latency" -> IndexType.Keyword).fields)
     val sink = java.nio.file.Files.createTempDirectory("grpc_jobs").toString + "/docs"
-    BulkIngest.writePartitioned(BulkIngest.project(Seq(
+    DocsWriter.overwrite(BulkIngest.project(Seq(
         """{"timestamp":"2024-03-10 09:00:00","level":"error","latency":"1.5"}""",
         """{"timestamp":"2024-03-10 10:00:00","level":"info","latency":"2.5"}""",
         """{"timestamp":"2024-03-11 11:00:00","level":"error","latency":"4"}""")

@@ -2,7 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
-import graft.ingest.BulkIngest
+import graft.ingest.{BulkIngest, DocsWriter}
 import graft.model.{IndexType, SeqMapping}
 
 /** The sink analyzer doubles as the regression guard for the ingest
@@ -22,7 +22,7 @@ class IndexAnalyzerSpec extends SparkSpec {
       s"""{"timestamp":"$day ${"%02d".format(i % 24)}:0${i % 6}:00","level":"l${i % 3}"}"""
     }
     val out = java.nio.file.Files.createTempDirectory("idx_an").toString
-    BulkIngest.writePartitioned(
+    DocsWriter.overwrite(
       BulkIngest.project(lines.toDF("value"), mapping, reqTime), out)
 
     val days = IndexAnalyzer.dayReport(IndexAnalyzer.perFile(spark, out))
