@@ -1459,7 +1459,7 @@ object SparkEntry {
     // uid = mix64(mid) XOR rid (two chained mix64 stages): XOR of the
     // raw ids alone degenerates when mid == rid (uid = 0 for every
     // row), so the engine pre-scrambles mid — mirrored here chain A
-    // (mix64 of mid) then chain B (DetSamplesAgg's own mix64 of uid)
+    // (mix64 of mid) then chain B (DetSamplesAggregate's own mix64 of uid)
     s"""WITH ${mix64Ctes(baseSelect, "a")},
         ${mix64Ctes(
           s"""SELECT $keyList, value, xor(${signed("au5")}, rid) AS uid FROM amh""", "b")},

@@ -14,9 +14,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * matches are written under
   * `resultsDir/<id>/chunk=<startMs>` with a done-marker, newest first;
   * a restart [[resume]]s from the missing chunks and [[fetchPartial]]
-  * serves whatever is complete at any moment.
+  * serves whatever is complete at any moment. Servers take theirs from
+  * [[ChunkedAsyncSearcher.forDir]], so co-hosted servers over one
+  * results directory share one searcher.
   */
-final class ChunkedAsyncSearcher(spark: SparkSession, resultsDir: String) {
+final class ChunkedAsyncSearcher(private val spark: SparkSession, resultsDir: String) {
 
   // re-creatable: a server stop() shuts the pool down with it, and a
   // restarted server (same searcher instance, e.g. across test
@@ -109,31 +111,37 @@ final class ChunkedAsyncSearcher(spark: SparkSession, resultsDir: String) {
     if (d.exists()) rm(d)
   }
 
+  /** Submit search `id`; false (and nothing runs) when this searcher
+    * is already running it, so two threads never write the same chunk
+    * directories. */
   def startAsync(id: String, engine: SeqEngine, query: String,
-      fromMs: Long, toMs: Long, chunkMs: Long = 86400000L): Unit = {
-    // persist the request BEFORE the first chunk runs: a process that
-    // dies anywhere after StartAsyncSearch leaves enough on disk for a
-    // restarted store to resume the remaining chunks
-    // (fracmanager/async_searcher.go:52-260 — progress survives
-    // restart, not just completed results)
-    Files.createDirectories(Paths.get(idDir(id)))
-    AsyncSearchFiles.writeAtomic(Paths.get(s"${idDir(id)}/.request"),
-      s"$fromMs\u0000$toMs\u0000$chunkMs\u0000$query"
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    running.add(id)
-    pool.submit(new Runnable {
-      override def run(): Unit =
-        try ChunkedAsyncSearcher.this.run(id, engine, query, fromMs, toMs, chunkMs)
-        finally running.remove(id)
-    })
-    ()
+      fromMs: Long, toMs: Long, chunkMs: Long = 86400000L): Boolean = {
+    if (!running.add(id)) return false
+    try {
+      // persist the request BEFORE the first chunk runs: a process that
+      // dies anywhere after StartAsyncSearch leaves enough on disk for a
+      // restarted store to resume the remaining chunks
+      // (fracmanager/async_searcher.go:52-260 — progress survives
+      // restart, not just completed results)
+      Files.createDirectories(Paths.get(idDir(id)))
+      AsyncSearchFiles.writeAtomic(Paths.get(s"${idDir(id)}/.request"),
+        s"$fromMs\u0000$toMs\u0000$chunkMs\u0000$query"
+          .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      pool.submit(new Runnable {
+        override def run(): Unit =
+          try ChunkedAsyncSearcher.this.run(id, engine, query, fromMs, toMs, chunkMs)
+          finally running.remove(id)
+      })
+    } catch { case e: Throwable => running.remove(id); throw e }
+    true
   }
 
   /** Resume every search whose persisted request has neither a
-    * completion nor a cancel marker — what a restarted store calls
-    * once, with its rebuilt engine. Done chunks are skipped by their
-    * markers inside [[run]]; only the missing ones re-execute. Returns
-    * the resumed ids. */
+    * completion nor a cancel marker and that this searcher is not
+    * already running — what a restarted store calls once, with its
+    * rebuilt engine. Done chunks are skipped by their markers inside
+    * [[run]]; only the missing ones re-execute. Returns the resumed
+    * ids. */
   def resumeIncomplete(engine: => SeqEngine): Seq[String] = {
     val root = new java.io.File(resultsDir)
     if (!root.isDirectory) return Nil
@@ -150,7 +158,6 @@ final class ChunkedAsyncSearcher(spark: SparkSession, resultsDir: String) {
         val Array(from, to, chunk, query) =
           Files.readString(Paths.get(s"${idDir(id)}/.request")).split("\u0000", 4)
         startAsync(id, engine, query, from.toLong, to.toLong, chunk.toLong)
-        true
       } catch {
         case e: Throwable =>
           System.err.println(
@@ -215,6 +222,22 @@ final class ChunkedAsyncSearcher(spark: SparkSession, resultsDir: String) {
         System.currentTimeMillis() < deadline)
       Thread.sleep(20)
   }
+}
+
+object ChunkedAsyncSearcher {
+  private val byDir = new ConcurrentHashMap[String, ChunkedAsyncSearcher]()
+
+  /** The one searcher over `resultsDir` (by canonical path) in this
+    * process, replaced once its session has stopped. Co-hosted servers
+    * given the same directory share its pool and its running set, so a
+    * server's [[ChunkedAsyncSearcher.resumeIncomplete]] skips the
+    * searches another server is still running. They also share its
+    * pool, so one server's stop() stops the other's searches too; the
+    * persisted chunks stay for a resume. */
+  def forDir(spark: SparkSession, resultsDir: String): ChunkedAsyncSearcher =
+    byDir.compute(new java.io.File(resultsDir).getCanonicalPath, (_, old) =>
+      if (old != null && !old.spark.sparkContext.isStopped) old
+      else new ChunkedAsyncSearcher(spark, resultsDir))
 }
 
 /** Crash-safe small-file persistence for the async-search metadata:

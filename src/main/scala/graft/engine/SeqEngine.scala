@@ -20,18 +20,6 @@ final case class SearchRequest(
     offset: Int = 0,
     asc: Boolean = false)
 
-/** ComplexSearch response: hits page + optional total / aggregations /
-  * histogram, all derived from one cached match set. Call
-  * `unpersist()` when done. */
-final case class ComplexSearchResult(
-    hits: DataFrame,
-    total: Option[Long],
-    aggs: Seq[DataFrame],
-    histogram: Option[DataFrame],
-    private val shared: DataFrame) {
-  def unpersist(): Unit = shared.unpersist()
-}
-
 /** Status RPC response shape (StatusResponse: number_of_stores,
   * oldest_storage_time, per-store detail). */
 final case class SeqStatus(
@@ -200,7 +188,7 @@ final class SeqEngine(val table: DocsTable) extends Serializable {
   }
 
   /** Date histogram over an already-filtered match set (shared by
-    * [[histogram]], [[complexSearch]] and the async-search fetch). */
+    * [[histogram]], gRPC ComplexSearch and the async-search fetch). */
   def histogramOver(m: DataFrame, intervalMs: Long): DataFrame =
     SeqEngine.sortInOnePartition(
       m.groupBy((mid - mid % lit(intervalMs)).as("bucket_ms")).agg(count(lit(1)).as("cnt")),
@@ -225,7 +213,7 @@ final class SeqEngine(val table: DocsTable) extends Serializable {
     }
 
   /** Aggregation over an already-filtered match set (shared by
-    * [[aggregate]] and [[complexSearch]]). */
+    * [[aggregate]] and gRPC ComplexSearch). */
   def aggregateOver(m0: DataFrame, agg: AggRequest): DataFrame = {
     // group_by over a text field groups by TOKEN, one contribution per
     // matching token (the reference's SourcedNodeIterator feeding the
@@ -342,7 +330,7 @@ final class SeqEngine(val table: DocsTable) extends Serializable {
     * mix64(mid) XOR rid — SQL-replayable (unlike Spark-private
     * xxhash64) yet non-degenerate for tables where mid == rid (a raw
     * mid XOR rid would be 0 on every row there, collapsing the sample
-    * to the smallest values); DetSamplesAgg applies its own mix64 on
+    * to the smallest values); DetSamplesAggregate applies its own mix64 on
     * top. Text-field group_by groups per TOKEN, exactly like
     * [[aggregateOver]].
     */
@@ -371,7 +359,7 @@ final class SeqEngine(val table: DocsTable) extends Serializable {
     * routing cap, the deterministic sketch above it. For any routing
     * cap at or below the sketch's sample bound (the default — cap =
     * ReservoirCap) the route needs NO probe and NO second pass:
-    * DetSamplesAgg keeps every value until a group exceeds
+    * DetSamplesAggregate keeps every value until a group exceeds
     * ReservoirCap, and its finish computes the same round(q·(n−1))
     * rank quantile over the sorted complete sample that the window
     * path computes (SeqAggregates.quantileOf), so the sketch rows ARE
@@ -407,9 +395,8 @@ final class SeqEngine(val table: DocsTable) extends Serializable {
       val out = if (maxN <= cap) exactQuantileFromFrame(qf, agg)
         else sketchQuantileFromFrame(qf, agg)
       // Localize the result before unpersisting: aggregation output is
-      // bucket-capped by contract (A7 requireGroupCardinality; quantile
-      // rows = buckets × names × quantiles), so collecting it is the
-      // same KB-sized response assembly the servers do anyway — and it
+      // one row per bucket × name × quantile, which the servers collect
+      // for the response anyway — and it
       // lets this call clean up its own cached frame instead of leaking
       // one CacheManager entry per distinct request in a long-lived
       // serving process.
@@ -449,7 +436,7 @@ final class SeqEngine(val table: DocsTable) extends Serializable {
   }
 
   /** Quantiles via the deterministic bottom-k sketch
-    * (graft.functions.SeqAggregates.DetSamplesAgg) — the at-scale path:
+    * (graft.functions.DetSamplesAggregate) — the at-scale path:
     * memory per bucket is bounded by the sample cap no matter the
     * bucket size, partials merge associatively AND the sample is
     * independent of partitioning/merge order (priority = mix64 of the
@@ -470,9 +457,8 @@ final class SeqEngine(val table: DocsTable) extends Serializable {
     val hasBucket = agg.intervalMs > 0
     // the UNTYPED imperative form of the bottom-k sketch: rows flow
     // through a native hash aggregate with a binary buffer instead of
-    // the Dataset groupByKey path (which boxes a case class + Option
+    // a Dataset groupByKey path (which boxes a case class + Option
     // per row — ~590k rows/s and GC-sensitive at the sf1 replica).
-    // Same arithmetic: both forms call SeqAggregates.DetOps verbatim.
     val agged = qf.groupBy(col("b"), col("n"))
       .agg(graft.functions.DetSamplesAggregate.column(col("v"), col("u"), qs).as("r"))
     // value-less buckets (only NotExists contributions) carry no
@@ -577,21 +563,6 @@ final class SeqEngine(val table: DocsTable) extends Serializable {
     }
   }
 
-  /** A7 cardinality cap: reject group-bys above `maxGroupTokens`
-    * distinct values (--agg-max-group-tokens, ErrTooManyUniqValues,
-    * frac/processor/eval_tree.go:78-85). Uses approx_count_distinct as
-    * a cheap one-pass guard (2% error margin is fine for a limit check).
-    */
-  def requireGroupCardinality(query: String, fromMs: Long, toMs: Long,
-      groupBy: String, maxGroupTokens: Long): Unit = {
-    val est = matches(query, fromMs, toMs)
-      .agg(approx_count_distinct(table.fieldCol(groupBy)).as("c"))
-      .collect()(0).getLong(0)
-    if (est > maxGroupTokens)
-      throw new SeqQlError(
-        s"too many unique values in group_by '$groupBy' (~$est > $maxGroupTokens)")
-  }
-
   /** A8 legacy filtered aggregation (parser/query_parser.go:178-205):
     * the aggregated "field" is itself a seq-ql filter; per group, count
     * docs matching it — sum(when(cond, 1)) keeps zero-groups visible.
@@ -604,31 +575,6 @@ final class SeqEngine(val table: DocsTable) extends Serializable {
         .groupBy(coalesce(table.fieldCol(groupBy).cast(StringType), lit("_not_exists")).as("name"))
         .agg(sum(when(cond, lit(1L)).otherwise(lit(0L))).as("value")),
       col("value").desc, col("name").asc)
-  }
-
-  /** ComplexSearch (§3.1): one request returning hits + total + any
-    * number of aggregations + histogram, like the reference's single
-    * gRPC call evaluating everything in one doc-id scan. The shared
-    * match set is cached for the duration of the call group so each
-    * output is computed without re-scanning; call `unpersist()` on the
-    * returned handle when done.
-    */
-  def complexSearch(
-      req: SearchRequest,
-      aggs: Seq[AggRequest] = Nil,
-      histIntervalMs: Long = 0,
-      withTotal: Boolean = false): ComplexSearchResult = {
-    val m = matches(req.query, req.fromMs, req.toMs)
-    val shouldCache = aggs.nonEmpty || histIntervalMs > 0 || withTotal
-    val shared = if (shouldCache) m.cache() else m
-    val ordered =
-      if (req.asc) shared.orderBy(mid.asc, rid.asc) else shared.orderBy(mid.desc, rid.desc)
-    val compiled = compiler.compile(req.query)
-    val hits = applyPipes(ordered.offset(req.offset).limit(req.size), compiled.pipes)
-    val total = if (withTotal) Some(shared.count()) else None
-    val aggResults = aggs.map(a => aggregateOver(shared, a))
-    val hist = if (histIntervalMs > 0) Some(histogramOver(shared, histIntervalMs)) else None
-    ComplexSearchResult(hits, total, aggResults, hist, shared)
   }
 
   /** Point lookup by (MID, RID) ids, preserving request order (S5,
@@ -651,43 +597,6 @@ final class SeqEngine(val table: DocsTable) extends Serializable {
     * seq/seq.go:37-53). */
   def fetchByIds(ids: Seq[String]): DataFrame =
     fetch(ids.map(graft.model.SeqId.parse).map(id => (id.mid, id.rid)))
-
-  /** Fetch with per-id routing hints — the store API's IdWithHint
-    * analogue (store_api.proto:167-170; integration test
-    * TestFetchHints). A hint names the day partition the doc is
-    * expected to live in (the fraction analogue, `date` value): a
-    * correct hint statically prunes the scan to the hinted partitions
-    * before the id join, an empty hint falls back to the full pruned
-    * path, and a WRONG hint finds nothing for that id — hints are
-    * routing constraints, not suggestions (the reference's broken-hint
-    * fetch comes back empty). On a table without a `date` column hints
-    * are unverifiable and ignored.
-    */
-  def fetchByIdsWithHints(idsWithHints: Seq[(String, String)]): DataFrame = {
-    val spark = table.df.sparkSession
-    import spark.implicits._
-    if (!table.df.columns.contains("date"))
-      return fetchByIds(idsWithHints.map(_._1))
-    val idsDf = idsWithHints.zipWithIndex
-      .map { case ((s, h), i) =>
-        val id = graft.model.SeqId.parse(s); (id.mid, id.rid, h, i)
-      }
-      .toDF("mid", "rid", "__hint", "__fetch_ord")
-    val hints = idsWithHints.map(_._2)
-    // all-hinted requests prune statically: only the hinted day
-    // partitions are scanned at all (the point of sending hints)
-    val base =
-      if (hints.forall(_.nonEmpty))
-        table.df.where(col("date").isin(hints.distinct: _*))
-      else table.df
-    base
-      .join(broadcast(idsDf),
-        base("mid") === idsDf("mid") && base("rid") === idsDf("rid") &&
-          (idsDf("__hint") === lit("") || idsDf("__hint") === base("date")))
-      .drop(idsDf("mid")).drop(idsDf("rid"))
-      .orderBy(col("__fetch_ord").asc)
-      .drop("__fetch_ord", "__hint")
-  }
 
   /** Attach the wire-format id string column (responses carry ids as
     * `hex(LE mid)-hex(LE rid)`). */
@@ -726,7 +635,7 @@ object SeqEngine {
     * sampling job and then a map job that each evaluate the final
     * aggregate again; over one partition the sort needs no exchange.
     * The bound: one task now holds every output row, and these rows are
-    * bucket- and group-capped (A7) and collected to the driver anyway.
+    * one per bucket and group, and collected to the driver anyway.
     * Never use it over raw match rows: `coalesce` is narrow, so it would
     * pull the whole upstream stage into that one task.
     */

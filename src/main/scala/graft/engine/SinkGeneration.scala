@@ -7,8 +7,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * (`ServingCore` and the HTTP facade's default read path) re-resolves
   * the sink only when [[signature]] moves — the reference searcher's
   * in-memory fraction list (fracmanager/searcher.go:89-101) instead of
-  * a per-query rediscovery. Every other reader of a sink path (tiered
-  * tables, the index analyzer) opens it through [[open]] too.
+  * a per-query rediscovery. Every other reader of a sink path (the
+  * index analyzer) opens it through [[open]] too.
   */
 private[graft] object SinkGeneration {
 

@@ -11,16 +11,14 @@ import org.apache.spark.sql.types._
 import SeqAggregates.{DetBuf, DetOps}
 
 /** The deterministic bottom-k quantile sketch as an UNTYPED imperative
-  * aggregate — the engine's hash-aggregate form of
-  * [[SeqAggregates.DetSamplesAgg]]. Same buffer, same arithmetic
-  * ([[SeqAggregates.DetOps]], shared verbatim), but the rows flow
-  * through `groupBy(...).agg(...)` partial aggregation with a binary
-  * buffer instead of the Dataset `groupByKey` path, which allocates a
-  * case class + Option box per input row — the typed form measured
-  * ~590k rows/s at the sf1 replica and inherited multi-second GC
-  * pauses from allocation-heavy neighbours; this form is the one to
-  * run over a billion-row match set. Output: struct(total,
-  * quantiles) — exactly what the quantile assembly consumes.
+  * aggregate over [[SeqAggregates.DetOps]]. The rows flow through
+  * `groupBy(...).agg(...)` partial aggregation with a binary buffer
+  * instead of a Dataset `groupByKey` path, which allocates a case
+  * class + Option box per input row — a typed form measured ~590k
+  * rows/s at the sf1 replica and inherited multi-second GC pauses from
+  * allocation-heavy neighbours; this form is the one to run over a
+  * billion-row match set. Output: struct(total, quantiles) — exactly
+  * what the quantile assembly consumes.
   */
 case class DetSamplesAggregate(
     v: Expression,

@@ -3,28 +3,20 @@ package graft.functions
 import org.apache.spark.sql.{Encoder, Encoders}
 import org.apache.spark.sql.expressions.Aggregator
 
-/** Mergeable one-pass stats sketch mirroring the reference's
+/** Mergeable one-pass stats sketches mirroring the reference's
   * SamplesContainer (seq/qpr.go:316-415): min/max/sum/count/notExists
-  * plus a bounded reservoir sample (cap 8096, RNG seed 73) from which
-  * discrete quantiles are read at `round(q * (n-1))` of the sorted
-  * sample (seq/qpr.go:345-364; q=0 → min, q=1 → max).
+  * plus a bounded sample (cap 8096) from which discrete quantiles are
+  * read at `round(q * (n-1))` of the sorted sample (seq/qpr.go:345-364;
+  * q=0 → min, q=1 → max), and a KMV distinct-count sketch.
   *
   * This is the at-scale aggregation path: per-partition partial
   * buffers merge associatively (classic partial+final agg), memory is
-  * bounded per group regardless of group size. The engine's exact
-  * window-based quantile is preferred when the data fits; this sketch
-  * replicates the reference's accuracy envelope instead.
+  * bounded per group regardless of group size.
   */
 object SeqAggregates {
 
   val ReservoirCap = 8096
   val Seed = 73L
-
-  final case class StatsBuf(
-      var min: Double, var max: Double, var sum: Double,
-      var total: Long, var notExists: Long,
-      var seen: Long, // values offered to the reservoir
-      var samples: Array[Double])
 
   final case class StatsResult(
       min: Double, max: Double, sum: Double, avg: Double,
@@ -39,86 +31,12 @@ object SeqAggregates {
     sorted(math.min(idx, sorted.length - 1))
   }
 
-  /** Aggregator over a nullable value column (null = field missing →
-    * NotExists, aggregator.go:160-233 `_not_exists` accounting). */
-  final class SamplesAgg(quantiles: Seq[Double])
-      extends Aggregator[Option[Double], StatsBuf, StatsResult] {
-
-    override def zero: StatsBuf =
-      StatsBuf(Double.PositiveInfinity, Double.NegativeInfinity, 0.0, 0L, 0L, 0L,
-        Array.empty[Double])
-
-    private def offer(b: StatsBuf, v: Double): Unit = {
-      b.seen += 1
-      if (b.samples.length < ReservoirCap) {
-        b.samples = b.samples :+ v
-      } else {
-        // Vitter's algorithm R with a deterministic RNG derived from
-        // (seed, seen) so results don't depend on JVM object identity.
-        val r = new java.util.Random(Seed ^ (b.seen * 0x9E3779B97F4A7C15L))
-        val j = (r.nextDouble() * b.seen).toLong
-        if (j < ReservoirCap) b.samples(j.toInt) = v
-      }
-    }
-
-    override def reduce(b: StatsBuf, in: Option[Double]): StatsBuf = in match {
-      case None => b.notExists += 1; b
-      case Some(v) =>
-        b.total += 1
-        b.sum += v
-        if (v < b.min) b.min = v
-        if (v > b.max) b.max = v
-        offer(b, v)
-        b
-    }
-
-    override def merge(a: StatsBuf, c: StatsBuf): StatsBuf = {
-      a.total += c.total
-      a.notExists += c.notExists
-      a.sum += c.sum
-      if (c.min < a.min) a.min = c.min
-      if (c.max > a.max) a.max = c.max
-      // sample-merge: concatenate then cap (reference MergeSamples,
-      // seq/qpr.go:366-387 keeps at most cap samples after merge)
-      val combined = a.samples ++ c.samples
-      a.samples =
-        if (combined.length <= ReservoirCap) combined
-        else {
-          // deterministic downsample: take every k-th of the sorted pool
-          val sorted = combined.sorted
-          Array.tabulate(ReservoirCap) { i =>
-            sorted(((i.toLong * sorted.length) / ReservoirCap).toInt)
-          }
-        }
-      a.seen += c.seen
-      a
-    }
-
-    override def finish(b: StatsBuf): StatsResult = {
-      val sorted = b.samples.sorted
-      StatsResult(
-        min = if (b.total == 0) Double.NaN else b.min,
-        max = if (b.total == 0) Double.NaN else b.max,
-        sum = b.sum,
-        avg = if (b.total == 0) Double.NaN else b.sum / b.total,
-        total = b.total,
-        notExists = b.notExists,
-        quantiles = quantiles.map(q => quantileOf(sorted, q)).toArray)
-    }
-
-    override def bufferEncoder: Encoder[StatsBuf] = Encoders.product[StatsBuf]
-    override def outputEncoder: Encoder[StatsResult] = Encoders.product[StatsResult]
-  }
-
-  def samplesAgg(quantiles: Seq[Double]): SamplesAgg = new SamplesAgg(quantiles)
-
   // ---------------------------------------------------------------------
   // Deterministic distributed sampling: bottom-k by hash priority.
   //
-  // The reservoir above mirrors the reference exactly but — like the
-  // reference — its sample depends on encounter order, and in a
-  // distributed run partial-merge order is scheduler-dependent. This
-  // variant assigns every row a priority = mix64(uid) (uid = any stable
+  // The reference's reservoir sample depends on encounter order, and in
+  // a distributed run partial-merge order is scheduler-dependent. This
+  // sketch assigns every row a priority = mix64(uid) (uid = any stable
   // per-row identity, e.g. hash(mid, rid)) and keeps the k smallest
   // priorities. Keeping "k smallest of a fixed random permutation" is a
   // uniform sample without replacement AND a commutative, associative,
@@ -134,8 +52,6 @@ object SeqAggregates {
     x ^ (x >>> 31)
   }
 
-  final case class DetIn(value: Option[Double], uid: Long)
-
   /** `used` is the fill pointer — `prios`/`samples` may have spare
     * capacity beyond it (geometric growth keeps inserts O(1) amortized;
     * a serialized buffer round-trips the spare slots harmlessly). */
@@ -144,11 +60,9 @@ object SeqAggregates {
       var total: Long, var notExists: Long, var used: Int,
       var prios: Array[Long], var samples: Array[Double])
 
-  /** The deterministic bottom-k buffer ops, shared VERBATIM by the
-    * typed [[DetSamplesAgg]] (streaming / Dataset path) and the
-    * untyped [[DetSamplesAggregate]] (the engine's hash-aggregate
-    * path) — one implementation, so the two plans are bit-identical
-    * and the external oracles replay a single arithmetic. */
+  /** The deterministic bottom-k buffer ops behind the engine's
+    * [[DetSamplesAggregate]] — one arithmetic, which the external
+    * oracles replay. */
   object DetOps {
     def zero: DetBuf =
       DetBuf(Double.PositiveInfinity, Double.NegativeInfinity, 0.0, 0L, 0L, 0,
@@ -213,29 +127,6 @@ object SeqAggregates {
         quantiles = quantiles.map(q => quantileOf(sorted, q)).toArray)
     }
   }
-
-  final class DetSamplesAgg(quantiles: Seq[Double])
-      extends Aggregator[DetIn, DetBuf, StatsResult] {
-
-    override def zero: DetBuf = DetOps.zero
-
-    override def reduce(b: DetBuf, in: DetIn): DetBuf = {
-      in.value match {
-        case None    => DetOps.addNull(b)
-        case Some(v) => DetOps.add(b, v, in.uid)
-      }
-      b
-    }
-
-    override def merge(a: DetBuf, c: DetBuf): DetBuf = DetOps.merge(a, c)
-
-    override def finish(b: DetBuf): StatsResult = DetOps.finish(b, quantiles)
-
-    override def bufferEncoder: Encoder[DetBuf] = Encoders.product[DetBuf]
-    override def outputEncoder: Encoder[StatsResult] = Encoders.product[StatsResult]
-  }
-
-  def detSamplesAgg(quantiles: Seq[Double]): DetSamplesAgg = new DetSamplesAgg(quantiles)
 
   /** KMV (k-minimum-values) distinct-count sketch buffer: the k
     * smallest DISTINCT 63-bit hash priorities seen so far. `used` is

@@ -29,12 +29,4 @@ object Tokenizers {
       if (t.length > MaxTokenSize) t.substring(0, MaxTokenSize) else t
     }
   }
-
-  /** Path prefixes: `/my/path` → `/my`, `/my/path`
-    * (tokenizer/path_tokenizer.go:33-71). */
-  def pathPrefixes(value: String): Seq[String] = {
-    val v = value
-    val idxs = v.zipWithIndex.collect { case ('/', i) if i > 0 => i }
-    idxs.map(i => v.substring(0, i)) :+ v
-  }
 }

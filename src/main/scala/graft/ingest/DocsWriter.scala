@@ -5,7 +5,7 @@ import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The one writer of the docs layout. The initial load, the streaming
-  * sink, `/_bulk`, compaction and tier migration all write through it,
+  * sink, `/_bulk` and compaction all write through it,
   * so every sink has one shape:
   *  - day partitions: a `date` column derived from `mid`, written with
   *    `partitionBy("date")` (fraction pruning ≈ partition pruning,
@@ -17,7 +17,7 @@ import org.apache.spark.sql.functions._
   * The operation follows from what the caller does: [[overwrite]]
   * replaces a sink (the initial load), [[append]] adds one epoch or
   * bulk under an id and is idempotent per id, and [[rewriteDay]]
-  * re-sorts one day (compaction, hot → cold moves).
+  * re-sorts one day in place (compaction).
   */
 object DocsWriter {
 
@@ -98,33 +98,32 @@ object DocsWriter {
     dropStagingIfEmpty(fs, sink)
   }
 
-  /** Rewrite day `day` (`yyyy-MM-dd`) of `src` as `files` range-disjoint
-    * files sorted on (mid, rid) into `dst`'s `date=day` — compaction
-    * when `src == dst`, a tier move otherwise. The new day is written
+  /** Rewrite day `day` (`yyyy-MM-dd`) of `sink` in place as `files`
+    * range-disjoint files sorted on (mid, rid). The new day is written
     * aside, then swapped in: the old day is renamed aside, the new one
     * renamed in, and only then is the old one deleted, so a crash never
     * leaves the day only in a deleted directory. */
-  def rewriteDay(spark: SparkSession, src: String, dst: String, day: String, files: Int): Unit = {
-    val fs = fileSystem(spark, dst)
-    val staged = new Path(s"$dst/_staging/day-$day")
-    val replaced = new Path(s"$dst/_staging/replaced-$day")
-    zstd(spark.read.parquet(s"$src/date=$day")
+  def rewriteDay(spark: SparkSession, sink: String, day: String, files: Int): Unit = {
+    val fs = fileSystem(spark, sink)
+    val staged = new Path(s"$sink/_staging/day-$day")
+    val replaced = new Path(s"$sink/_staging/replaced-$day")
+    zstd(spark.read.parquet(s"$sink/date=$day")
       .repartitionByRange(files, col("mid"), col("rid"))
       .sortWithinPartitions(col("mid"), col("rid"))
       .write.mode("overwrite")).parquet(staged.toString)
-    val dayDir = new Path(s"$dst/date=$day")
+    val dayDir = new Path(s"$sink/date=$day")
     fs.delete(replaced, true)
     if (fs.exists(dayDir)) rename(fs, dayDir, replaced)
     rename(fs, staged, dayDir)
     fs.delete(replaced, true)
-    dropStagingIfEmpty(fs, dst)
+    dropStagingIfEmpty(fs, sink)
   }
 
   private def fileSystem(spark: SparkSession, path: String): FileSystem =
     new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   /** What Spark's reader would read: not `_`- or `.`-prefixed. */
-  private def isData(p: Path): Boolean = !p.getName.startsWith("_") && !p.getName.startsWith(".")
+  private[graft] def isData(p: Path): Boolean = !p.getName.startsWith("_") && !p.getName.startsWith(".")
 
   private def rename(fs: FileSystem, from: Path, to: Path): Unit =
     if (!fs.rename(from, to)) throw new java.io.IOException(s"rename $from -> $to failed")

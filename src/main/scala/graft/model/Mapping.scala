@@ -58,9 +58,6 @@ final case class SeqMapping(
       throw new SeqQlError(s"field '$field' is not indexed (not in mapping)"))
 
   def isIndexed(field: String): Boolean = spec(field).isDefined
-
-  def withField(name: String, tpe: IndexType): SeqMapping =
-    copy(fields = fields + (name -> FieldSpec(name, Seq(tpe))))
 }
 
 class SeqQlError(msg: String) extends RuntimeException(msg)

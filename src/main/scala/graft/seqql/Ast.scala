@@ -65,19 +65,6 @@ object Pattern {
   case object Star extends Part
   final case class Lit(s: String) extends Part
   def exact(s: String): Pattern = Pattern(Vector(Lit(s)))
-  /** Build from raw text where unescaped `*` is a wildcard. */
-  def fromRaw(s: String): Pattern = {
-    val parts = Vector.newBuilder[Part]
-    val sb = new StringBuilder
-    for (c <- s) c match {
-      case '*' =>
-        if (sb.nonEmpty) { parts += Lit(sb.toString); sb.clear() }
-        parts += Star
-      case other => sb += other
-    }
-    if (sb.nonEmpty) parts += Lit(sb.toString)
-    normalize(Pattern(parts.result()))
-  }
   /** Collapse adjacent stars/literals. */
   def normalize(p: Pattern): Pattern = {
     val out = Vector.newBuilder[Part]

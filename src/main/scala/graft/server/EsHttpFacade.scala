@@ -176,7 +176,7 @@ final class EsHttpFacade(
   @volatile private var asyncStarted = false
   private lazy val asyncSearcher = {
     asyncStarted = true
-    new ChunkedAsyncSearcher(spark, s"$sinkDir/_async")
+    ChunkedAsyncSearcher.forDir(spark, s"$sinkDir/_async")
   }
 
   private def body(ex: HttpExchange): String = {

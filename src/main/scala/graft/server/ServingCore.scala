@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 import graft.engine.{DocsTable, SearchRequest, SeqEngine, SinkGeneration}
+import graft.ingest.DocsWriter
 import graft.model.SeqMapping
 
 /** Serving-mode machinery shared by the HTTP facade and the gRPC API:
@@ -125,8 +126,23 @@ final class ServingCore(
       // memory region stays free for query execution.
       val maxPinned = spark.conf
         .get("spark.graft.serving.maxPinnedBytes", (8L << 30).toString).toLong
-      val sinkBytes =
-        if (!fs.exists(p)) 0L else fs.getContentSummary(p).getLength
+      // one top-level listing sizes the pin and yields the day
+      // partitions. Only data files count: root-level ones (an
+      // unpartitioned sink) and those of `date=` directories. The
+      // writers' scratch directories (`_staging`, Spark's `_temporary`,
+      // `_async`) are never entered, so one vanishing mid-listing can
+      // neither fail the rebuild nor inflate the size.
+      val top =
+        try fs.listStatus(p).toSeq
+        catch { case _: java.io.FileNotFoundException => Nil }
+      val days = top.filter(s => s.isDirectory && s.getPath.getName.startsWith("date="))
+      val sinkBytes = top.filter(s => s.isFile && DocsWriter.isData(s.getPath)).map(_.getLen).sum +
+        days.map { d =>
+          // a day renamed aside by a rewrite after the listing: it
+          // moved the signature, so the next probe rebuilds anyway
+          try fs.listStatus(d.getPath).filter(f => f.isFile && DocsWriter.isData(f.getPath)).map(_.getLen).sum
+          catch { case _: java.io.FileNotFoundException => 0L }
+        }.sum
       val level =
         if (sinkBytes > maxPinned) org.apache.spark.storage.StorageLevel.DISK_ONLY
         else org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
@@ -138,11 +154,7 @@ final class ServingCore(
       val eng = new SeqEngine(DocsTable(df, liveMapping))
       // day partitions newest-first, straight from the FS listing (no
       // Spark job) — drives the incremental page scan below
-      val dates =
-        if (!fs.exists(p)) Nil
-        else fs.listStatus(p).map(_.getPath.getName)
-          .filter(_.startsWith("date=")).map(_.stripPrefix("date="))
-          .sorted.reverse.toSeq
+      val dates = days.map(_.getPath.getName.stripPrefix("date=")).sorted.reverse
       val fresh = new Generation(sig, eng, dates)
       current = fresh
       fresh

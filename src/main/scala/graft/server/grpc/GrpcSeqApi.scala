@@ -51,7 +51,7 @@ final class GrpcSeqApi(
   @volatile private var asyncStarted = false
   private lazy val asyncSearcher = {
     asyncStarted = true
-    val s = new ChunkedAsyncSearcher(spark, asyncDir)
+    val s = ChunkedAsyncSearcher.forDir(spark, asyncDir)
     // restart durability: a previous process over this asyncDir may
     // have died between StartAsyncSearch and completion. Reload the
     // persisted request metadata (retention/aggs/asc are consulted at

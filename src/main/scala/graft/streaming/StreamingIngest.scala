@@ -87,30 +87,12 @@ object StreamingIngest {
       targetFiles: Int = 1, bloomFields: Seq[String] = Nil,
       mapping: Option[SeqMapping] = None,
       zoneCols: Seq[String] = Nil): Unit = {
-    DocsWriter.rewriteDay(spark, outPath, outPath, date, targetFiles)
+    DocsWriter.rewriteDay(spark, outPath, date, targetFiles)
     if (bloomFields.nonEmpty) {
       require(mapping.isDefined, "compactDay bloom update needs the mapping")
       graft.index.TokenBloomIndex.update(spark, outPath, mapping.get, bloomFields)
     }
     if (zoneCols.nonEmpty)
       graft.index.ZoneMapIndex.update(spark, outPath, zoneCols)
-  }
-
-  /** Retention: drop day partitions older than `keepDays` relative to
-    * `nowMs` (fraction deletion by age, T5/docs/en/internal/fractions.md).
-    */
-  def enforceRetention(spark: SparkSession, outPath: String, nowMs: Long, keepDays: Int): Seq[String] = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    val base = new org.apache.hadoop.fs.Path(outPath)
-    if (!fs.exists(base)) return Nil
-    val cutoff = java.time.Instant.ofEpochMilli(nowMs)
-      .minus(java.time.Duration.ofDays(keepDays))
-      .toString.take(10)
-    val dropped = fs.listStatus(base).toSeq
-      .map(_.getPath)
-      .filter(p => p.getName.startsWith("date="))
-      .filter(p => p.getName.stripPrefix("date=") < cutoff)
-    dropped.foreach(p => fs.delete(p, true))
-    dropped.map(_.getName)
   }
 }

@@ -60,14 +60,7 @@ object IndexAnalyzer {
   def main(args: Array[String]): Unit = {
     val path = args.headOption.getOrElse(
       sys.error("usage: IndexAnalyzer <sinkPath>"))
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[32]"))
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Bench.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
     try {
       val days = dayReport(perFile(spark, path)).collect()
       val fs = new org.apache.hadoop.fs.Path(path)

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Operational reindex job: migrate a persisted MinHash band index to
   * the CURRENT hash family in place. A pre-v2 index (built before the
   * affine-correlation fix in the permutation family) is refused by
@@ -21,13 +19,7 @@ object ReindexMinhash {
     val path = args(0)
     val numHashes = if (args.length > 1) args(1).toInt else 128
     val bands = if (args.length > 2) args(2).toInt else 32
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[32]"))
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Bench.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
     val migrated = graft.dataprep.Dedup.migrateMinhashIndex(spark, path, numHashes, bands)
     println(
       if (migrated)

@@ -250,12 +250,6 @@ class EngineSpec extends SparkSpec {
     }
   }
 
-  test("A7 cardinality cap rejects high-cardinality group_by") {
-    assertThrows[graft.model.SeqQlError](
-      eng.requireGroupCardinality("*", T0, T31, "event_id", maxGroupTokens = 100))
-    eng.requireGroupCardinality("*", T0, T31, "event_type", maxGroupTokens = 100)
-  }
-
   test("quantile sketch equals exact quantiles under the sample cap") {
     val req = AggRequest(AggFunc.Quantile(Seq(0.5, 0.9)), field = "value",
       groupBy = Some("event_type"))
@@ -299,38 +293,6 @@ class EngineSpec extends SparkSpec {
       .collect().map(r => graft.model.SeqId(r.getLong(0), r.getLong(1)).toString).toSeq
     val got = eng.fetchByIds(ids).select("rid").collect().map(_.getLong(0)).toSet
     assert(got == Set(1L, 2L))
-  }
-
-  test("fetch hints: correct hints prune, empty hints fall back, broken hints find nothing") {
-    import spark.implicits._
-    // hints name day partitions, so this test needs the ingest path's
-    // date-partitioned layout (TestFetchHints analogue)
-    val mapping = SeqMapping.of("level" -> IndexType.Keyword)
-    val lines = Seq(
-      """{"timestamp":"2024-03-10 09:00:00","level":"error"}""",
-      """{"timestamp":"2024-03-09 13:00:00","level":"info"}""") // 23h back, within drift
-    val dir = java.nio.file.Files.createTempDirectory("hints").toString
-    graft.ingest.DocsWriter.overwrite(
-      graft.ingest.BulkIngest.project(lines.toDF("value"), mapping, 1710072000000L), dir)
-    val t = DocsTable(spark.read.parquet(dir), mapping)
-    val e = new SeqEngine(t)
-    val rows = t.df.select(col("mid"), col("rid"), col("date").cast("string"))
-      .collect()
-      .map(r => (graft.model.SeqId(r.getLong(0), r.getLong(1)).toString,
-        r.getString(2))).sortBy(_._2).toSeq
-    assert(rows.map(_._2).distinct.size == 2) // two day partitions
-    def fetched(hints: Seq[(String, String)]): Seq[String] =
-      e.fetchByIdsWithHints(hints).select(col("date").cast("string"))
-        .collect().map(_.getString(0)).toSeq
-    // correct hints: all docs found, request order preserved
-    assert(fetched(rows) == rows.map(_._2))
-    // no hints: same result via the fallback path
-    assert(fetched(rows.map { case (id, _) => (id, "") }) == rows.map(_._2))
-    // broken hints: routing constraint violated → nothing found
-    assert(fetched(rows.map { case (id, _) => (id, "1999-01-01") }).isEmpty)
-    // mixed: the one correct hint still resolves
-    val mixed = fetched(Seq((rows.head._1, rows.head._2), (rows.last._1, "1999-01-01")))
-    assert(mixed == Seq(rows.head._2))
   }
 
   test("chunked async search: partial results, restart resume") {

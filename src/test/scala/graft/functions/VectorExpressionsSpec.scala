@@ -3,7 +3,6 @@ package graft.functions
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
 import graft.dataprep.Similarity
-import graft.engine.{AggRequest, AggFunc, SearchRequest, SeqEngine}
 import graft.tables.TestTables
 
 class VectorExpressionsSpec extends SparkSpec {
@@ -113,22 +112,5 @@ class VectorExpressionsSpec extends SparkSpec {
       Tokenizers.textTokens(col("t"), caseSensitive = false).as("fast"),
       ReferenceForms.textTokensRegex(col("t"), caseSensitive = false).as("ref")).collect()
     rows.foreach(r => assert(r.getSeq[String](0) == r.getSeq[String](1), r))
-  }
-
-  test("complexSearch: hits, total, aggs, histogram from one match set") {
-    val eng = new SeqEngine(TestTables.eventsDocs(spark, sfDir))
-    val res = eng.complexSearch(
-      SearchRequest("event_type:error", 1704067200000L, 1706745599999L, size = 10),
-      aggs = Seq(AggRequest(AggFunc.Count, groupBy = Some("event_type"))),
-      histIntervalMs = 86400000L,
-      withTotal = true)
-    try {
-      assert(res.hits.count() == 10)
-      assert(res.total.exists(_ > 10))
-      val aggRows = res.aggs.head.collect()
-      assert(aggRows.length == 1 && aggRows(0).getString(0) == "error")
-      assert(aggRows(0).getLong(1) == res.total.get)
-      assert(res.histogram.get.agg(sum("cnt")).collect()(0).getLong(0) == res.total.get)
-    } finally res.unpersist()
   }
 }

@@ -73,16 +73,11 @@ class TokenizerSpec extends AnyFunSuite {
     val long = "a" * 100
     assert(Tokenizers.tokenize(long, caseSensitive = false) == Seq("a" * 72))
   }
-
-  test("path prefixes (tokenizer/path_tokenizer.go:33-71)") {
-    assert(Tokenizers.pathPrefixes("/my/path/deep") ==
-      Seq("/my", "/my/path", "/my/path/deep"))
-    assert(Tokenizers.pathPrefixes("rel/x") == Seq("rel", "rel/x"))
-  }
 }
 
 class ReservoirSpec extends AnyFunSuite {
   import graft.functions.SeqAggregates
+  import graft.functions.SeqAggregates.DetOps
 
   test("discrete quantile index = round(q*(n-1)) (seq/qpr.go:345-364)") {
     val sorted = Array(1.0, 2.0, 3.0, 4.0)
@@ -93,24 +88,26 @@ class ReservoirSpec extends AnyFunSuite {
   }
 
   test("small input: exact stats, full sample retained") {
-    val agg = SeqAggregates.samplesAgg(Seq(0.5))
-    var b = agg.zero
-    for (v <- Seq(5.0, 1.0, 3.0)) b = agg.reduce(b, Some(v))
-    b = agg.reduce(b, None) // missing field
-    val r = agg.finish(b)
+    val b = DetOps.zero
+    for ((v, uid) <- Seq(5.0, 1.0, 3.0).zipWithIndex) DetOps.add(b, v, uid.toLong)
+    DetOps.addNull(b) // missing field
+    val r = DetOps.finish(b, Seq(0.5))
     assert(r.min == 1.0 && r.max == 5.0 && r.sum == 9.0 && r.total == 3 && r.notExists == 1)
     assert(r.avg == 3.0)
     assert(r.quantiles.toSeq == Seq(3.0))
   }
 
   test("deterministic bottom-k sketch: same result for ANY partition/merge order") {
-    import graft.functions.SeqAggregates.DetIn
-    val agg = SeqAggregates.detSamplesAgg(Seq(0.5, 0.9))
-    val data = (1 to 20000).map(i => DetIn(Some((i * 37 % 20011).toDouble), i.toLong))
-    def runPartitioned(chunks: Seq[Seq[DetIn]], mergeLeft: Boolean) = {
-      val bufs = chunks.map(c => c.foldLeft(agg.zero)((b, in) => agg.reduce(b, in)))
-      val merged = if (mergeLeft) bufs.reduceLeft(agg.merge) else bufs.reduceRight(agg.merge)
-      agg.finish(merged)
+    // (value, uid) pairs; the sample keeps the lowest mix64(uid) priorities
+    val data = (1 to 20000).map(i => ((i * 37 % 20011).toDouble, i.toLong))
+    def runPartitioned(chunks: Seq[Seq[(Double, Long)]], mergeLeft: Boolean) = {
+      val bufs = chunks.map { c =>
+        val b = DetOps.zero
+        c.foreach { case (v, uid) => DetOps.add(b, v, uid) }
+        b
+      }
+      val merged = if (mergeLeft) bufs.reduceLeft(DetOps.merge) else bufs.reduceRight(DetOps.merge)
+      DetOps.finish(merged, Seq(0.5, 0.9))
     }
     val a = runPartitioned(data.grouped(977).toSeq, mergeLeft = true)
     val b = runPartitioned(scala.util.Random.shuffle(data).grouped(3001).toSeq, mergeLeft = false)
@@ -182,14 +179,13 @@ class ReservoirSpec extends AnyFunSuite {
   }
 
   test("reservoir caps at 8096 and merge stays bounded") {
-    val agg = SeqAggregates.samplesAgg(Seq(0.5, 0.99))
-    var a = agg.zero
-    var b = agg.zero
-    for (v <- 1 to 10000) a = agg.reduce(a, Some(v.toDouble))
-    for (v <- 10001 to 20000) b = agg.reduce(b, Some(v.toDouble))
-    val m = agg.merge(a, b)
-    assert(m.samples.length <= SeqAggregates.ReservoirCap)
-    val r = agg.finish(m)
+    val a = DetOps.zero
+    val b = DetOps.zero
+    for (v <- 1 to 10000) DetOps.add(a, v.toDouble, v.toLong)
+    for (v <- 10001 to 20000) DetOps.add(b, v.toDouble, v.toLong)
+    val m = DetOps.merge(a, b)
+    assert(m.used <= SeqAggregates.ReservoirCap && m.samples.length <= SeqAggregates.ReservoirCap)
+    val r = DetOps.finish(m, Seq(0.5, 0.99))
     assert(r.total == 20000 && r.min == 1.0 && r.max == 20000.0)
     // sampling accuracy: median within 5% of true median
     assert(math.abs(r.quantiles(0) - 10000.0) / 10000.0 < 0.05)

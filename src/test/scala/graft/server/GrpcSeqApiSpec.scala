@@ -106,6 +106,15 @@ class GrpcSeqApiSpec extends SparkSpec {
       assert(cs.total == 3 && cs.docs.size == 1)
       assert(cs.aggs.head.buckets.nonEmpty && cs.hist.exists(_.buckets.size == 3))
       assert(cs.explain.isEmpty) // not requested
+      // hits, total, aggs and histogram come from one match set: on a
+      // filtered query the count agg and the histogram both sum to the
+      // total
+      val csErr = client.complexSearch(PComplexSearchRequest(q,
+        Seq(PAggQuery("", "level", func = 0, Nil, "")),
+        Some("1h"), size = 1, offset = 0, withTotal = true, asc = false))
+      assert(csErr.total == 2 && csErr.docs.size == 1)
+      assert(csErr.aggs.head.buckets.map(b => b.key -> b.value) == Seq("error" -> 2.0))
+      assert(csErr.hist.get.buckets.map(_.docCount).sum == csErr.total)
 
       // explain: the tracing tree is the executed Catalyst plan
       val ce = client.complexSearch(PComplexSearchRequest(
@@ -480,6 +489,43 @@ class GrpcSeqApiSpec extends SparkSpec {
       // retention stays anchored at the ORIGINAL start time
       assert(far.expirationMs.exists(_ > System.currentTimeMillis()))
     } finally { client2.close(); api2.stop() }
+  }
+
+  test("co-hosted servers share one async searcher: gRPC's resume does not re-run an HTTP search") {
+    val sink = java.nio.file.Files.createTempDirectory("grpc_shared_async").toString + "/docs"
+    DocsWriter.overwrite(BulkIngest.project(lines.toDF("value"), mapping, reqTime), sink)
+    val facade = new EsHttpFacade(spark, mapping, sink)
+    val httpPort = facade.start()
+    // the wiring perfbench uses: the gRPC API's async dir is the facade's
+    val api = new GrpcSeqApi(spark, facade.table, s"$sink/_async", metrics = facade.metrics)
+    val client = new GrpcSeqClient("127.0.0.1", api.start(), api)
+    val id = s"shared${System.nanoTime()}" // a job group no earlier run used
+    try {
+      // 3-minute chunks over the table's two hours: 41 chunk jobs, so
+      // the search still runs when the gRPC searcher is first built
+      val r = java.net.http.HttpClient.newHttpClient().send(
+        java.net.http.HttpRequest.newBuilder(
+            java.net.URI.create(s"http://127.0.0.1:$httpPort/async_search/start"))
+          .POST(java.net.http.HttpRequest.BodyPublishers.ofString(
+            s"""{"query":"level:error","from":0,"to":${Long.MaxValue},"chunk_ms":180000,"id":"$id"}"""))
+          .build(), java.net.http.HttpResponse.BodyHandlers.ofString())
+      assert(r.statusCode() == 200, r.body())
+      // the first gRPC async call builds that server's searcher, which
+      // resumes every incomplete search on disk
+      val dl = System.currentTimeMillis() + 60000
+      while (!client.fetchAsync(PFetchAsyncRequest(id, withDocs = false, 0, 0)).done &&
+          System.currentTimeMillis() < dl) Thread.sleep(50)
+    } finally { client.close(); api.stop(); facade.stop() }
+    val chunks = new java.io.File(s"$sink/_async/$id").listFiles()
+      .count(_.getName.startsWith(".done_"))
+    assert(chunks == 41, s"search did not complete: $chunks chunks")
+    // the status tracker learns of jobs from the listener bus: once it
+    // has seen a fence job, it has seen every earlier one
+    val st = spark.sparkContext.statusTracker
+    val fence = spark.sparkContext.parallelize(Seq(0), 1).countAsync().jobIds.head
+    while (st.getJobInfo(fence).isEmpty) Thread.sleep(20)
+    val jobs = st.getJobIdsForGroup(s"async-$id").length
+    assert(jobs == chunks, s"$jobs chunk jobs for $chunks chunks")
   }
 
   /** A default-mode gRPC API over a facade's by-name `table`, the way a

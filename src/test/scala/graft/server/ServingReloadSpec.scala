@@ -113,4 +113,50 @@ class ServingReloadSpec extends SparkSpec {
       spark.conf.unset("spark.graft.serving.maxPinnedBytes")
     }
   }
+
+  test("serving pin size counts only data files and never lists the writers' scratch directories") {
+    import org.apache.spark.storage.StorageLevel
+    import org.apache.spark.sql.functions._
+    val mapping = SeqMapping.of("level" -> IndexType.Keyword)
+    val sink = java.nio.file.Files.createTempDirectory("graft_pin_scratch").toString + "/docs"
+    spark.range(100)
+      .select(col("id").as("mid"), col("id").as("rid"), lit("error").as("level"),
+        lit("2024-03-10").as("date"))
+      .write.partitionBy("date").parquet(sink)
+    def isData(f: java.io.File) = !f.getName.startsWith("_") && !f.getName.startsWith(".")
+    val dataBytes = new java.io.File(s"$sink/date=2024-03-10").listFiles()
+      .filter(isData).map(_.length).sum
+    // a finished async result of 1 MB: not part of the sink's data
+    val blob = java.nio.file.Paths.get(s"$sink/_async/done/chunk=0/part-0.parquet")
+    java.nio.file.Files.createDirectories(blob.getParent)
+    java.nio.file.Files.write(blob, new Array[Byte](1 << 20))
+    spark.conf.set("spark.graft.serving.maxPinnedBytes", (dataBytes + 4096).toString)
+    try {
+      val core = new ServingCore(spark, mapping, sink)
+      assert(core.engine.table.df.storageLevel == StorageLevel.MEMORY_AND_DISK)
+      core.engine.table.df.unpersist(blocking = true)
+    } finally spark.conf.unset("spark.graft.serving.maxPinnedBytes")
+
+    // a writer's staging directory that vanishes while the rebuild
+    // walks the sink (VanishingStagingFs fails the listing of any
+    // `_staging/x`): the rebuild must not enter it at all
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"$sink/_staging/x"))
+    spark.sparkContext.hadoopConfiguration.set(
+      "fs.vanishing.impl", classOf[VanishingStagingFs].getName)
+    val core = new ServingCore(spark, mapping, s"vanishing://$sink")
+    assert(core.engine.matches("level:error", 0L, Long.MaxValue).count() == 100)
+    core.engine.table.df.unpersist(blocking = true)
+  }
+}
+
+/** The local file system under the `vanishing:` scheme, except that
+  * listing a `_staging/x` directory fails as if its writer had just
+  * removed it. */
+class VanishingStagingFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: URI = URI.create("vanishing:///")
+  override def getScheme: String = "vanishing"
+  override def listStatus(p: org.apache.hadoop.fs.Path): Array[org.apache.hadoop.fs.FileStatus] =
+    if (p.getName == "x" && p.getParent.getName == "_staging")
+      throw new java.io.FileNotFoundException(s"$p vanished")
+    else super.listStatus(p)
 }

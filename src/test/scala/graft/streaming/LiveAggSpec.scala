@@ -35,61 +35,4 @@ class LiveAggSpec extends SparkSpec {
       ))
     } finally q.stop()
   }
-
-  test("live KMV unique sketch: exact below cap, matches batch sketch semantics") {
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[String]
-    val docs = BulkIngest.project(mem.toDF(), mapping, requestTimeMs = 1710072000000L)
-    val agg = LiveAggregates.liveUniqueSketch(docs, "level", 3600000L, "10 minutes", k = 8)
-    val q = agg.writeStream.outputMode(OutputMode.Complete())
-      .format("memory").queryName("live_unique").start()
-    try {
-      mem.addData(
-        """{"timestamp":"2024-03-10 09:10:00","level":"error"}""",
-        """{"timestamp":"2024-03-10 09:20:00","level":"warn"}""",
-        """{"timestamp":"2024-03-10 09:30:00","level":"error"}""",
-        """{"timestamp":"2024-03-10 09:40:00","level":"info"}""",
-        """{"timestamp":"2024-03-10 10:05:00","level":"info"}""")
-      q.processAllAvailable()
-      val rows = spark.sql("SELECT bucket_ms, est_unique FROM live_unique ORDER BY bucket_ms")
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-      assert(rows == Seq(
-        (1710061200000L, 3L), // 09:00 bucket: error, warn, info
-        (1710064800000L, 1L), // 10:00 bucket: info
-      ))
-    } finally q.stop()
-  }
-
-  test("live quantile sketch: exact quantiles below cap, arrival-order independent") {
-    implicit val sqlCtx = spark.sqlContext
-    val numMapping = SeqMapping.of("v" -> IndexType.Keyword)
-    val mem = MemoryStream[String]
-    val docs = BulkIngest.project(mem.toDF(), numMapping, requestTimeMs = 1710072000000L)
-    val agg = LiveAggregates.liveQuantileSketch(docs, "v", 3600000L, "10 minutes",
-      quantiles = Seq(0.0, 0.5, 1.0))
-    val q = agg.writeStream.outputMode(OutputMode.Complete())
-      .format("memory").queryName("live_quantiles").start()
-    try {
-      // values 10, 20, 30, 40, 50 in one window, delivered out of order
-      // and across two micro-batches
-      mem.addData(
-        """{"timestamp":"2024-03-10 09:10:00","v":"30"}""",
-        """{"timestamp":"2024-03-10 09:11:00","v":"10"}""",
-        """{"timestamp":"2024-03-10 09:12:00","v":"50"}""")
-      q.processAllAvailable()
-      mem.addData(
-        """{"timestamp":"2024-03-10 09:13:00","v":"40"}""",
-        """{"timestamp":"2024-03-10 09:14:00","v":"20"}""")
-      q.processAllAvailable()
-      val rows = spark.sql(
-        "SELECT q, value, min, max, total FROM live_quantiles ORDER BY q")
-        .collect().map(r => (r.getDouble(0), r.getDouble(1), r.getDouble(2),
-          r.getDouble(3), r.getLong(4))).toSeq
-      // reference quantile rule: sorted sample at round(q*(n-1))
-      assert(rows == Seq(
-        (0.0, 10.0, 10.0, 50.0, 5L),
-        (0.5, 30.0, 10.0, 50.0, 5L),
-        (1.0, 50.0, 10.0, 50.0, 5L)))
-    } finally q.stop()
-  }
 }

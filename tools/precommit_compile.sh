@@ -36,4 +36,17 @@ if git diff --cached --name-only | grep -qE '\.(scala|sbt)$'; then
   fi
   echo "[precommit] compile green"
 fi
+
+# perfbench is its own sbt build over RootProject(".."): a change to
+# src/main that drops something perfbench calls compiles above but
+# breaks every benchmark run, so build perfbench too.
+if git diff --cached --name-only | grep -q '^src/main/'; then
+  echo "[precommit] staged src/main changes - running sbt compile in perfbench/"
+  if ! (cd perfbench && sbt --batch compile) > /tmp/graft_precommit_perfbench.log 2>&1; then
+    tail -40 /tmp/graft_precommit_perfbench.log
+    echo "[precommit] PERFBENCH COMPILE FAILED - commit blocked (full log: /tmp/graft_precommit_perfbench.log)"
+    exit 1
+  fi
+  echo "[precommit] perfbench compile green"
+fi
 exit 0
