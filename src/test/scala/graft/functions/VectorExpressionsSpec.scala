@@ -3,6 +3,7 @@ package graft.functions
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
 import graft.dataprep.Similarity
+import graft.engine.{AggRequest, AggFunc, SearchRequest, SeqEngine}
 import graft.tables.TestTables
 
 class VectorExpressionsSpec extends SparkSpec {
@@ -112,5 +113,21 @@ class VectorExpressionsSpec extends SparkSpec {
       Tokenizers.textTokens(col("t"), caseSensitive = false).as("fast"),
       ReferenceForms.textTokensRegex(col("t"), caseSensitive = false).as("ref")).collect()
     rows.foreach(r => assert(r.getSeq[String](0) == r.getSeq[String](1), r))
+  }
+
+  test("complexSearch: hits, total, aggs, histogram from one match set") {
+    // the engine calls gRPC ComplexSearch composes: each output is its
+    // own plan over the same filter, so on a filtered query the count
+    // agg and the histogram both sum to the total
+    val eng = new SeqEngine(TestTables.eventsDocs(spark, sfDir))
+    val (q, from, to) = ("event_type:error", 1704067200000L, 1706745599999L)
+    assert(eng.search(SearchRequest(q, from, to, size = 10)).count() == 10)
+    val total = eng.total(q, from, to).collect()(0).getLong(0)
+    assert(total > 10)
+    val aggRows = eng.aggregate(q, from, to,
+      AggRequest(AggFunc.Count, groupBy = Some("event_type"))).collect()
+    assert(aggRows.length == 1 && aggRows(0).getString(0) == "error")
+    assert(aggRows(0).getLong(1) == total)
+    assert(eng.histogram(q, from, to, 86400000L).agg(sum("cnt")).collect()(0).getLong(0) == total)
   }
 }
