@@ -155,21 +155,19 @@ object SparkEntry {
         AggRequest(AggFunc.Quantile(Seq(0.5, 0.9, 0.99)), field = "value",
           groupBy = Some("event_type")))),
 
-    // ---- A4 via the deterministic bottom-k sketch (the oracle replays
-    // the sample selection itself — exact above AND below the cap) ----
+    // ---- A4 through the deterministic bottom-k sample (every quantile
+    // runs it; the oracle replays the sample selection itself — exact
+    // above AND below the cap). This row and the next keep their names
+    // and run the same call as seq_agg_quantile ----
     "seq_agg_quantile_sketch" -> ((s, dir) =>
-      ev(s, dir).aggregateQuantileSketch("*", T0, T31,
+      ev(s, dir).aggregate("*", T0, T31,
         AggRequest(AggFunc.Quantile(Seq(0.5, 0.9, 0.99)), field = "value",
           groupBy = Some("event_type")))),
 
-    // ---- A4 auto-route forced onto the sketch plan: cap far below
-    // the sf0.01 per-type bucket sizes, so this exercises the
-    // above-threshold branch (no per-group window sort in the plan;
-    // QuantileRouteSpec asserts it) ----
     "seq_agg_quantile_auto" -> ((s, dir) =>
-      ev(s, dir).aggregateQuantileAuto("*", T0, T31,
+      ev(s, dir).aggregate("*", T0, T31,
         AggRequest(AggFunc.Quantile(Seq(0.5, 0.9, 0.99)), field = "value",
-          groupBy = Some("event_type")), cap = 256L)),
+          groupBy = Some("event_type")))),
 
     // ---- A5 time-series bins ----
     "seq_agg_timeseries_day" -> ((s, dir) =>
@@ -1442,9 +1440,7 @@ object SparkEntry {
     * (priority = splitmix64(mix64(mid) XOR rid), keep the ReservoirCap
     * smallest (prio, value) pairs), so the oracle replays the very same
     * sample selection. Below the cap the selection keeps every row, so
-    * this also equals the exact window-rank definition — which is why
-    * the auto-routed engine path (exact below cap, sketch above) is
-    * checkable by this ONE query regardless of which plan it picked.
+    * this also equals the exact window-rank definition.
     */
   private def quantileSketchReplaySqlFor(
       baseSelect: String, keys: Seq[String], qs: Seq[Double]): String = {
@@ -1491,9 +1487,8 @@ object SparkEntry {
       Seq("name"), Seq(0.5, 0.9, 0.99))
 
   /** The time-series variant: same universal replay, partitioned by
-    * (weekly bucket, name) — the sf1 sweep caught the old exact-window
-    * oracle diverging once weekly buckets crossed the routing cap and
-    * the engine (correctly) picked the sketch plan. */
+    * (weekly bucket, name): at sf1 the weekly buckets exceed the
+    * sample cap, where an exact-window oracle would diverge. */
   private lazy val quantileTsSketchReplaySql: String =
     quantileSketchReplaySqlFor(
       s"""SELECT $M - $M % 604800000 AS bucket_ms,
@@ -1708,14 +1703,10 @@ object SparkEntry {
           FROM events WHERE $M BETWEEN $T0 AND $T31
           GROUP BY 1 ORDER BY name ASC""",
 
-    // auto-routed: exact plan below cap, sketch above — the replay
-    // oracle covers both (see quantileSketchReplaySql)
     "seq_agg_quantile" -> quantileSketchReplaySql,
 
     "seq_agg_quantile_sketch" -> quantileSketchReplaySql,
 
-    // routing cap forced below the sf0.01 bucket sizes → the sketch
-    // plan runs here, same replay oracle
     "seq_agg_quantile_auto" -> quantileSketchReplaySql,
 
     "seq_agg_timeseries_day" ->

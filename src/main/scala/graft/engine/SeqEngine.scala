@@ -118,12 +118,20 @@ final class SeqEngine(val table: DocsTable) extends Serializable {
   /** Time-pruned, filtered, replica-deduplicated doc set. The [from,to]
     * MID range is inclusive on both ends (frac/processor/search.go:211-232).
     */
-  def matches(query: String, fromMs: Long, toMs: Long): DataFrame = {
-    val compiled = compiler.compile(query)
-    val base = table.df
-      .where(table.timeFilter(fromMs, toMs) && compiled.filter)
+  def matches(query: String, fromMs: Long, toMs: Long): DataFrame =
+    matchesOf(compiler.compile(query), fromMs, toMs, None)
+
+  /** The one match builder: `timeFilter && filter && extra` as a single
+    * conjunction over the table, then the replica dedup. */
+  private def matchesOf(compiled: graft.seqql.CompiledQuery, fromMs: Long, toMs: Long,
+      extra: Option[Column]): DataFrame = {
+    val cond = table.timeFilter(fromMs, toMs) && compiled.filter
+    val base = table.df.where(extra.fold(cond)(cond && _))
     if (table.dedupReplicas) base.dropDuplicates("mid", "rid") else base
   }
+
+  private def inMidOrder(df: DataFrame, asc: Boolean): DataFrame =
+    if (asc) df.orderBy(mid.asc, rid.asc) else df.orderBy(mid.desc, rid.desc)
 
   /** Top-k search with offset pagination: store-side limit=size+offset,
     * proxy slices the offset after the merge
@@ -133,13 +141,8 @@ final class SeqEngine(val table: DocsTable) extends Serializable {
     */
   def search(req: SearchRequest): DataFrame = {
     val compiled = compiler.compile(req.query)
-    val base = table.df
-      .where(table.timeFilter(req.fromMs, req.toMs) && compiled.filter)
-    val deduped = if (table.dedupReplicas) base.dropDuplicates("mid", "rid") else base
-    val ordered =
-      if (req.asc) deduped.orderBy(mid.asc, rid.asc)
-      else deduped.orderBy(mid.desc, rid.desc)
-    val page = ordered.offset(req.offset).limit(req.size)
+    val page = inMidOrder(matchesOf(compiled, req.fromMs, req.toMs, None), req.asc)
+      .offset(req.offset).limit(req.size)
     applyPipes(page, compiled.pipes)
   }
 
@@ -158,21 +161,15 @@ final class SeqEngine(val table: DocsTable) extends Serializable {
   def searchPrefix(query: String, fromMs: Long, toMs: Long, n: Int,
       asc: Boolean, extra: Column): DataFrame = {
     val compiled = compiler.compile(query)
-    val base = table.df
-      .where(table.timeFilter(fromMs, toMs) && compiled.filter && extra)
-    val deduped = if (table.dedupReplicas) base.dropDuplicates("mid", "rid") else base
-    val ordered =
-      if (asc) deduped.orderBy(mid.asc, rid.asc) else deduped.orderBy(mid.desc, rid.desc)
-    applyPipes(ordered.limit(n), compiled.pipes)
+    applyPipes(inMidOrder(matchesOf(compiled, fromMs, toMs, Some(extra)), asc).limit(n),
+      compiled.pipes)
   }
 
   /** Full streaming export of all matches in time order (S6,
     * proxyapi/grpc_export.go). Consume with toLocalIterator. */
   def export(query: String, fromMs: Long, toMs: Long, asc: Boolean = false): DataFrame = {
     val compiled = compiler.compile(query)
-    val m = matches(query, fromMs, toMs)
-    val ordered = if (asc) m.orderBy(mid.asc, rid.asc) else m.orderBy(mid.desc, rid.desc)
-    applyPipes(ordered, compiled.pipes)
+    applyPipes(inMidOrder(matchesOf(compiled, fromMs, toMs, None), asc), compiled.pipes)
   }
 
   /** `with_total`: count of all matches post-dedup (O6). */
@@ -204,16 +201,10 @@ final class SeqEngine(val table: DocsTable) extends Serializable {
     * others → (value desc, name asc); all after bucket_ms asc.
     */
   def aggregate(query: String, fromMs: Long, toMs: Long, agg: AggRequest): DataFrame =
-    agg.func match {
-      // quantiles route on bucket size (see [[aggregateQuantileAuto]]):
-      // the exact window plan is skew-fragile at scale, the sketch is
-      // identical to it below the cap and bounded-memory above
-      case AggFunc.Quantile(_) => aggregateQuantileAuto(query, fromMs, toMs, agg)
-      case _ => aggregateOver(matches(query, fromMs, toMs), agg)
-    }
+    aggregateOver(matches(query, fromMs, toMs), agg)
 
   /** Aggregation over an already-filtered match set (shared by
-    * [[aggregate]] and gRPC ComplexSearch). */
+    * [[aggregate]], gRPC ComplexSearch and the async-search fetch). */
   def aggregateOver(m0: DataFrame, agg: AggRequest): DataFrame = {
     // group_by over a text field groups by TOKEN, one contribution per
     // matching token (the reference's SourcedNodeIterator feeding the
@@ -232,8 +223,8 @@ final class SeqEngine(val table: DocsTable) extends Serializable {
     val hasBucket = agg.intervalMs > 0
     val bucketCol = (mid - mid % lit(agg.intervalMs)).as("bucket_ms")
 
-    def nameCol(field: String): Column =
-      coalesce(groupCol.get.cast(StringType), lit("_not_exists")).as("name")
+    val groupName = groupCol.map(c => coalesce(c.cast(StringType), lit("_not_exists")))
+    def nameCol: Column = groupName.get.as("name")
 
     def groupCols(extra: Column*): Seq[Column] =
       (if (hasBucket) Seq(bucketCol) else Nil) ++ extra
@@ -249,15 +240,13 @@ final class SeqEngine(val table: DocsTable) extends Serializable {
 
     agg.func match {
       case AggFunc.Count =>
-        val g = agg.groupBy.getOrElse(
-          throw new SeqQlError("COUNT aggregation requires group_by"))
+        if (agg.groupBy.isEmpty) throw new SeqQlError("COUNT aggregation requires group_by")
         SeqEngine.sortInOnePartition(
-          m.groupBy(groupCols(nameCol(g)): _*).agg(count(lit(1)).as("value")),
+          m.groupBy(groupCols(nameCol): _*).agg(count(lit(1)).as("value")),
           sortCols(valueFirstAsc = false, valueDesc = true): _*)
 
       case AggFunc.Unique =>
-        val g = agg.groupBy.getOrElse(
-          throw new SeqQlError("UNIQUE aggregation requires group_by"))
+        if (agg.groupBy.isEmpty) throw new SeqQlError("UNIQUE aggregation requires group_by")
         SeqEngine.sortInOnePartition(
           m.where(groupCol.get.isNotNull)
             .select(groupCols(groupCol.get.cast(StringType).as("name")): _*)
@@ -273,7 +262,7 @@ final class SeqEngine(val table: DocsTable) extends Serializable {
           case _           => avg
         }
         val grouped = agg.groupBy match {
-          case Some(g) => m.groupBy(groupCols(nameCol(g)): _*)
+          case Some(_) => m.groupBy(groupCols(nameCol): _*)
           case None    => m.groupBy(groupCols(): _*)
         }
         val out = grouped.agg(fn(v).as("value"))
@@ -283,26 +272,35 @@ final class SeqEngine(val table: DocsTable) extends Serializable {
           sortCols(valueFirstAsc = f == AggFunc.Min, valueDesc = f != AggFunc.Min): _*)
 
       case AggFunc.Quantile(qs) =>
-        // Discrete quantile at rank round(q*(n-1)) over the sorted
-        // per-bucket values — the reference's sampling-free definition
-        // (seq/qpr.go:345-364). Exact here; the bounded-memory sketch
-        // for huge buckets is [[aggregateQuantileSketch]].
-        val v = valueCol(agg.field)
-        val keys = groupCols(agg.groupBy.map(nameCol).toSeq: _*)
+        // seq-db's one quantile path (seq/qpr.go:345-415): a seeded
+        // sample of at most SeqAggregates.ReservoirCap values per bucket
+        // (graft.functions.DetSamplesAggregate), then the discrete
+        // quantile at rank round(q*(n-1)) over the sorted sample. Below
+        // the cap the sample is complete, so the answer is exact. The
+        // sample is independent of partitioning and merge order: its
+        // priority is a mix64 of the row identity u = mix64(mid) XOR
+        // rid — SQL-replayable (unlike Spark-private xxhash64) and not
+        // degenerate where mid == rid (a raw mid XOR rid would be 0 on
+        // every row there).
+        val frame = m.select(
+          (if (hasBucket) mid - mid % lit(agg.intervalMs) else lit(0L)).as("b"),
+          groupName.getOrElse(lit("")).as("n"),
+          valueCol(agg.field).as("v"),
+          graft.functions.VectorExpressions.mix64(mid).bitwiseXOR(rid).as("u"))
+        // the untyped form: rows flow through a native hash aggregate
+        // with a binary buffer, not a boxing Dataset groupByKey
+        val agged = frame.groupBy(col("b"), col("n"))
+          .agg(graft.functions.DetSamplesAggregate.column(col("v"), col("u"), qs).as("r"))
+        // value-less buckets (only NotExists contributions) carry no
+        // quantile rows; a NaN data value still counts as a value
+        val rows = agged.where(col("r.total") > 0)
+          .select(col("b").as("bucket_ms"), col("n").as("name"),
+            posexplode(col("r.quantiles")).as(Seq("pos", "value")))
+          .withColumn("q", element_at(lit(qs.toArray), col("pos") + 1))
         val keyNames = (if (hasBucket) Seq("bucket_ms") else Nil) ++
           (if (agg.groupBy.isDefined) Seq("name") else Nil)
-        val withV = m.select(keys :+ v.as("__v"): _*).where(col("__v").isNotNull)
-        import org.apache.spark.sql.expressions.Window
-        val w = if (keyNames.isEmpty) Window.partitionBy(lit(0)) else Window.partitionBy(keyNames.map(col): _*)
-        val ranked = withV
-          .withColumn("__rn", row_number().over(w.orderBy(col("__v").asc)) - 1)
-          .withColumn("__n", count(lit(1)).over(w))
-        val spark = table.df.sparkSession
-        val qDf = spark.createDataFrame(qs.map(Tuple1(_))).toDF("q")
-        ranked.join(qDf,
-            col("__rn") === round(col("q") * (col("__n") - 1)).cast(LongType))
-          .select(keyNames.map(col) ++ Seq(col("q"), col("__v").as("value")): _*)
-          .orderBy((keyNames.map(c => col(c).asc) :+ col("q").asc): _*)
+        SeqEngine.sortInOnePartition(rows.select(keyNames.map(col) ++ Seq(col("q"), col("value")): _*),
+          keyNames.map(c => col(c).asc) :+ col("q").asc: _*)
     }
   }
 
@@ -324,160 +322,10 @@ final class SeqEngine(val table: DocsTable) extends Serializable {
         .otherwise(parsed)
   }
 
-  /** The (b, n, v, u) quantile input frame shared by the sketch path
-    * and the auto-route probe: bucket key, group name, double value,
-    * and the row identity feeding the sample priority. The identity is
-    * mix64(mid) XOR rid — SQL-replayable (unlike Spark-private
-    * xxhash64) yet non-degenerate for tables where mid == rid (a raw
-    * mid XOR rid would be 0 on every row there, collapsing the sample
-    * to the smallest values); DetSamplesAggregate applies its own mix64 on
-    * top. Text-field group_by groups per TOKEN, exactly like
-    * [[aggregateOver]].
-    */
-  private def quantileFrame(query: String, fromMs: Long, toMs: Long,
-      agg: AggRequest): DataFrame = {
-    val m0 = matches(query, fromMs, toMs)
-    val hasBucket = agg.intervalMs > 0
-    val (m, nameC): (DataFrame, Column) = agg.groupBy match {
-      case Some(g) if table.mapping.isIndexed(g) &&
-          table.mapping.typeOf(g) == graft.model.IndexType.Text =>
-        val toks = table.tokensCol(g)
-        (m0.withColumn("__gname", explode_outer(when(size(toks) > 0, toks))),
-          coalesce(col("__gname"), lit("_not_exists")))
-      case Some(g) =>
-        (m0, coalesce(table.fieldCol(g).cast(StringType), lit("_not_exists")))
-      case None => (m0, lit(""))
-    }
-    val v = valueCol(agg.field)
-    val bucket = if (hasBucket) mid - mid % lit(agg.intervalMs) else lit(0L)
-    m.select(bucket.as("b"), nameC.as("n"), v.as("v"),
-      graft.functions.VectorExpressions.mix64(mid).bitwiseXOR(rid).as("u"))
-  }
-
-  /** Auto-routed quantiles — what [[aggregate]] dispatches to: the
-    * exact window-rank answer when every bucket's value count fits the
-    * routing cap, the deterministic sketch above it. For any routing
-    * cap at or below the sketch's sample bound (the default — cap =
-    * ReservoirCap) the route needs NO probe and NO second pass:
-    * DetSamplesAggregate keeps every value until a group exceeds
-    * ReservoirCap, and its finish computes the same round(q·(n−1))
-    * rank quantile over the sorted complete sample that the window
-    * path computes (SeqAggregates.quantileOf), so the sketch rows ARE
-    * the exact rows below the cap and the documented bounded-memory
-    * contract above it. One partial-merge aggregation pass, no
-    * per-group window sort anywhere in the plan — the route happens
-    * per group inside the aggregator, for free. (Round-10's two-pass
-    * version spent more on the cardinality probe than on the query it
-    * routed: 1.31 s vs 0.50 s at sf0.1.)
-    *
-    * A routing cap ABOVE the sample bound genuinely needs the probe —
-    * complete samples are no longer guaranteed where the caller still
-    * demands exactness — so that (test-only) case keeps the measured
-    * two-pass route.
-    */
-  def aggregateQuantileAuto(query: String, fromMs: Long, toMs: Long,
-      agg: AggRequest,
-      cap: Long = graft.functions.SeqAggregates.ReservoirCap.toLong): DataFrame = {
-    if (cap <= graft.functions.SeqAggregates.ReservoirCap.toLong)
-      return sketchQuantileFromFrame(quantileFrame(query, fromMs, toMs, agg), agg)
-    // cap > sample bound: measure, then pick the exact window plan when
-    // every bucket fits. One shared persisted frame: the routing probe
-    // is the action that materializes it, so the chosen plan reads the
-    // cache instead of re-scanning the match set.
-    val qf = quantileFrame(query, fromMs, toMs, agg)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val maxBucket = qf
-        .where(col("v").isNotNull)
-        .groupBy(col("b"), col("n")).agg(count(lit(1)).as("c"))
-        .agg(max(col("c"))).collect()(0)
-      val maxN = if (maxBucket.isNullAt(0)) 0L else maxBucket.getLong(0)
-      val out = if (maxN <= cap) exactQuantileFromFrame(qf, agg)
-        else sketchQuantileFromFrame(qf, agg)
-      // Localize the result before unpersisting: aggregation output is
-      // one row per bucket × name × quantile, which the servers collect
-      // for the response anyway — and it
-      // lets this call clean up its own cached frame instead of leaking
-      // one CacheManager entry per distinct request in a long-lived
-      // serving process.
-      val rows = out.collect()
-      table.df.sparkSession.createDataFrame(
-        java.util.Arrays.asList(rows: _*), out.schema)
-    } finally { qf.unpersist(); () }
-  }
-
-  /** Exact window-rank quantiles over a prepared (b, n, v, u) frame —
-    * identical rows to the Quantile branch of [[aggregateOver]] (same
-    * name/bucket/value derivation: [[quantileFrame]] mirrors it), but
-    * reading the auto-route's persisted frame instead of re-deriving
-    * from the match set. */
-  private def exactQuantileFromFrame(qf: DataFrame, agg: AggRequest): DataFrame = {
-    val qs = agg.func match {
-      case AggFunc.Quantile(x) => x
-      case other => throw new SeqQlError(s"quantile called with $other")
-    }
-    val hasBucket = agg.intervalMs > 0
-    val keyNames = (if (hasBucket) Seq("bucket_ms") else Nil) ++
-      (if (agg.groupBy.isDefined) Seq("name") else Nil)
-    val withV = qf.select(col("b").as("bucket_ms"), col("n").as("name"),
-        col("v").as("__v")).where(col("__v").isNotNull)
-    import org.apache.spark.sql.expressions.Window
-    val w = if (keyNames.isEmpty) Window.partitionBy(lit(0))
-      else Window.partitionBy(keyNames.map(col): _*)
-    val ranked = withV
-      .withColumn("__rn", row_number().over(w.orderBy(col("__v").asc)) - 1)
-      .withColumn("__n", count(lit(1)).over(w))
-    val spark = table.df.sparkSession
-    val qDf = spark.createDataFrame(qs.map(Tuple1(_))).toDF("q")
-    ranked.join(qDf,
-        col("__rn") === round(col("q") * (col("__n") - 1)).cast(LongType))
-      .select(keyNames.map(col) ++ Seq(col("q"), col("__v").as("value")): _*)
-      .orderBy((keyNames.map(c => col(c).asc) :+ col("q").asc): _*)
-  }
-
-  /** Quantiles via the deterministic bottom-k sketch
-    * (graft.functions.DetSamplesAggregate) — the at-scale path:
-    * memory per bucket is bounded by the sample cap no matter the
-    * bucket size, partials merge associatively AND the sample is
-    * independent of partitioning/merge order (priority = mix64 of the
-    * row id), so a 1000-executor run reproduces a single-thread run
-    * bit-for-bit. Below the cap the sample is complete, so results
-    * equal the exact window-rank quantiles of [[aggregateOver]].
-    * Output shape matches the Quantile branch of [[aggregateOver]].
-    */
-  def aggregateQuantileSketch(query: String, fromMs: Long, toMs: Long,
-      agg: AggRequest): DataFrame =
-    sketchQuantileFromFrame(quantileFrame(query, fromMs, toMs, agg), agg)
-
-  private def sketchQuantileFromFrame(qf: DataFrame, agg: AggRequest): DataFrame = {
-    val qs = agg.func match {
-      case AggFunc.Quantile(x) => x
-      case other => throw new SeqQlError(s"quantile sketch called with $other")
-    }
-    val hasBucket = agg.intervalMs > 0
-    // the UNTYPED imperative form of the bottom-k sketch: rows flow
-    // through a native hash aggregate with a binary buffer instead of
-    // a Dataset groupByKey path (which boxes a case class + Option
-    // per row — ~590k rows/s and GC-sensitive at the sf1 replica).
-    val agged = qf.groupBy(col("b"), col("n"))
-      .agg(graft.functions.DetSamplesAggregate.column(col("v"), col("u"), qs).as("r"))
-    // value-less buckets (only NotExists contributions) carry no
-    // quantile rows — but a legitimately-NaN data value survives,
-    // matching the exact path's isNotNull semantics
-    val rows = agged.where(col("r.total") > 0)
-      .select(col("b").as("bucket_ms"), col("n").as("name"),
-        posexplode(col("r.quantiles")).as(Seq("pos", "value")))
-      .withColumn("q", element_at(lit(qs.toArray), col("pos") + 1))
-    val keyNames = (if (hasBucket) Seq("bucket_ms") else Nil) ++
-      (if (agg.groupBy.isDefined) Seq("name") else Nil)
-    SeqEngine.sortInOnePartition(rows.select(keyNames.map(col) ++ Seq(col("q"), col("value")): _*),
-      keyNames.map(c => col(c).asc) :+ col("q").asc: _*)
-  }
-
   /** A2 UNIQUE cardinality via the deterministic KMV bottom-k sketch
     * (graft.functions.SeqAggregates.KmvAgg) — the at-scale companion
-    * to the exact-distinct Unique branch of [[aggregateOver]], same
-    * role the bottom-k sample plays for quantiles: memory per bucket
+    * to the exact-distinct Unique branch of [[aggregateOver]], the role
+    * the bottom-k sample plays for quantiles: memory per bucket
     * is O(k) no matter how many distinct values the bucket holds,
     * partials merge associatively, and the result is independent of
     * partitioning/merge order. Exact below the cap; above it the

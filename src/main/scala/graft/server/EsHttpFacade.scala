@@ -79,15 +79,11 @@ final class EsHttpFacade(
     limits: RateLimits = RateLimits(),
     mappingPath: Option[String] = None) {
 
-  /** Live mapping: when `mappingPath` is set the file is re-read (the
-    * serving core folds its signature into the generation probe, the
-    * per-call path re-reads on each request — both within the 1 s
-    * staleness bound); parse failures keep the constructor mapping. */
-  private def currentMapping: SeqMapping =
-    if (serving) servingCore.currentMapping
-    else mappingPath.fold(mapping) { mp =>
-      try SeqMapping.loadYaml(mp) catch { case _: Exception => mapping }
-    }
+  /** Live mapping, in both modes: when `mappingPath` is set the file is
+    * re-read, and a parse failure keeps the last mapping that parsed
+    * ([[ServingCore.currentMapping]]). Constructing the lazy core builds
+    * no generation, so the default mode pays nothing for it. */
+  private def currentMapping: SeqMapping = servingCore.currentMapping
 
   @volatile private var server: HttpServer = _
 
@@ -518,8 +514,8 @@ final class EsHttpFacade(
   }
 
   /** Render a small result DataFrame as JSON objects, schema-driven —
-    * aggregation/histogram responses are bucket-sized (A7 caps), never
-    * corpus-sized, so a driver-side collect is the intended shape. */
+    * aggregation/histogram responses hold one row per bucket and group,
+    * never one per doc, so a driver-side collect is the intended shape. */
   private def rowsJson(df: org.apache.spark.sql.DataFrame): String = {
     val fields = df.schema.fields
     SeqEngine.collectStrict(df).map { r =>

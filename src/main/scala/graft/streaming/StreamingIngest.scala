@@ -24,22 +24,13 @@ object StreamingIngest {
     * `requestTimeMs` supplies the deterministic "arrival time" for
     * drift clamping in tests; pass None for wall clock per batch.
     */
-  /** `bloomFields` (optional): after each batch lands, incrementally
-    * index its new files into the token-Bloom sidecars
-    * (graft.index.TokenBloomIndex.update — only unseen files are
-    * touched, so the per-batch cost is one pass over the batch's own
-    * output). Leaving it empty keeps the write path minimal; the
-    * sidecar can always be caught up out-of-band.
-    */
   def start(
       lines: DataFrame,
       mapping: SeqMapping,
       outPath: String,
       checkpointPath: String,
       requestTimeMs: Option[Long] = None,
-      triggerMs: Long = 1000,
-      bloomFields: Seq[String] = Nil,
-      zoneCols: Seq[String] = Nil): StreamingQuery = {
+      triggerMs: Long = 1000): StreamingQuery = {
     lines.writeStream
       .trigger(Trigger.ProcessingTime(triggerMs))
       .option("checkpointLocation", checkpointPath)
@@ -52,23 +43,6 @@ object StreamingIngest {
         val query = batch.sparkSession.sparkContext
           .getLocalProperty(StreamExecution.QUERY_ID_KEY).replace("-", "")
         DocsWriter.append(BulkIngest.project(batch, mapping, reqTime), outPath, s"${query}e$batchId")
-        // advisory-only index maintenance does not fail the epoch: the
-        // append above is idempotent per epoch, but an index outage must
-        // not stall ingest. Unindexed files are merely unprunable until
-        // the next catch-up.
-        if (bloomFields.nonEmpty)
-          try graft.index.TokenBloomIndex.update(
-            batch.sparkSession, outPath, mapping, bloomFields)
-          catch { case e: Exception =>
-            System.err.println(s"[StreamingIngest] bloom update skipped: $e")
-          }
-        // zone-map maintenance: same advisory-only contract
-        if (zoneCols.nonEmpty)
-          try graft.index.ZoneMapIndex.update(batch.sparkSession, outPath, zoneCols)
-          catch { case e: Exception =>
-            System.err.println(s"[StreamingIngest] zonemap update skipped: $e")
-          }
-        ()
       }
       .start()
   }
@@ -78,21 +52,7 @@ object StreamingIngest {
     * few large files sorted by (mid, rid) — the "sealing" analogue
     * (frac/active_sealer.go), run out-of-band per closed day.
     */
-  /** `bloomFields`: sidecars to catch up after the swap — the
-    * compacted files are new to the index (update only touches those);
-    * rows for the replaced small files dangle harmlessly (candidate
-    * selection intersects with the live file list).
-    */
   def compactDay(spark: SparkSession, outPath: String, date: String,
-      targetFiles: Int = 1, bloomFields: Seq[String] = Nil,
-      mapping: Option[SeqMapping] = None,
-      zoneCols: Seq[String] = Nil): Unit = {
+      targetFiles: Int = 1): Unit =
     DocsWriter.rewriteDay(spark, outPath, date, targetFiles)
-    if (bloomFields.nonEmpty) {
-      require(mapping.isDefined, "compactDay bloom update needs the mapping")
-      graft.index.TokenBloomIndex.update(spark, outPath, mapping.get, bloomFields)
-    }
-    if (zoneCols.nonEmpty)
-      graft.index.ZoneMapIndex.update(spark, outPath, zoneCols)
-  }
 }

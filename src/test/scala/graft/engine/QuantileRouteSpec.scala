@@ -1,15 +1,19 @@
 package graft.engine
 
+import org.apache.spark.sql.functions._
+
 import graft.SparkSpec
+import graft.functions.ReferenceForms
+import graft.model.{IndexType, SeqMapping}
 import graft.tables.TestTables
 
-/** The quantile auto-route (SeqEngine.aggregateQuantileAuto): exact
-  * window-rank ANSWERS when every bucket fits the cap; the bounded-
-  * memory bottom-k sketch above it. For caps at or below the sketch's
-  * sample bound the route is a single aggregation pass (the sketch's
-  * complete-below-cap sample IS the exact answer) — no probe, and the
-  * plan must carry NO per-group window sort (the skew-fragile shape at
-  * scale). Only a cap above the sample bound pays for the probe.
+/** The one quantile path: every quantile request — `aggregate`, and
+  * `aggregateOver` as gRPC ComplexSearch and the async-search fetch
+  * call it — runs the seeded bottom-k sample of at most
+  * SeqAggregates.ReservoirCap values per bucket. Below the cap the
+  * sample is complete, so the answer equals the exact window-rank
+  * quantiles of [[ReferenceForms.windowRankQuantiles]]; the plan never
+  * carries a per-group window sort or a persisted probe frame.
   */
 class QuantileRouteSpec extends SparkSpec {
 
@@ -18,41 +22,39 @@ class QuantileRouteSpec extends SparkSpec {
     AggFunc.Quantile(Seq(0.5, 0.9)), field = "value", groupBy = Some("event_type"))
   private val (t0, t31) = (1704067200000L, 1706745599999L)
 
-  test("above the cap the routed plan has no window sort") {
-    val out = engine.aggregateQuantileAuto("*", t0, t31, agg, cap = 10L)
+  test("aggregate's quantile plan has no window sort and no probe cache") {
+    val out = engine.aggregate("*", t0, t31, agg)
     out.collect()
     val plan = out.queryExecution.executedPlan.toString
     assert(!plan.contains("Window"), plan)
-    assert(!plan.contains("RunningWindowFunction"), plan)
-  }
-
-  test("below the cap the routed result is the exact window path") {
-    val exact = engine.aggregateOver(engine.matches("*", t0, t31), agg)
-    val routed = engine.aggregateQuantileAuto("*", t0, t31, agg, cap = Long.MaxValue)
-    assert(routed.collect().toSeq == exact.collect().toSeq)
-  }
-
-  test("above the cap the routed result equals the sketch path") {
-    val sketch = engine.aggregateQuantileSketch("*", t0, t31, agg).collect().toSeq
-    val routed = engine.aggregateQuantileAuto("*", t0, t31, agg, cap = 10L).collect().toSeq
-    assert(routed == sketch)
-  }
-
-  test("the default cap routes in one pass: no window sort, no probe cache") {
-    val out = engine.aggregateQuantileAuto("*", t0, t31, agg)
-    out.collect()
-    val plan = out.queryExecution.executedPlan.toString
-    assert(!plan.contains("Window"), plan)
-    // single-pass: nothing persisted by the route (the old probe left a
-    // MEMORY_AND_DISK frame in the CacheManager for its lifetime)
     assert(!plan.contains("InMemoryTableScan"), plan)
   }
 
-  test("aggregate() dispatches quantiles through the auto-route") {
-    // at sf0.001 every bucket is far below the default cap, so the
-    // dispatch must reproduce the exact path bit-for-bit
-    val viaAggregate = engine.aggregate("*", t0, t31, agg).collect().toSeq
-    val exact = engine.aggregateOver(engine.matches("*", t0, t31), agg).collect().toSeq
-    assert(viaAggregate == exact)
+  test("aggregate equals the exact window-rank quantiles below the sample cap") {
+    val e = engine
+    val exact = ReferenceForms.windowRankQuantiles(
+      e.matches("*", t0, t31).select(
+        coalesce(col("event_type").cast("string"), lit("_not_exists")).as("name"),
+        col("value").cast("double").as("v")),
+      Seq("name"), Seq(0.5, 0.9))
+    val out = e.aggregate("*", t0, t31, agg).collect().toSeq
+    assert(out.nonEmpty)
+    assert(out == exact.collect().toSeq)
+  }
+
+  test("async fetch's aggregateOver equals aggregate above the sample cap") {
+    // one bucket of 20 000 values: above the 8096-value cap, where an
+    // exact plan and the sample answer differently
+    val day = 1710028800000L // 2024-03-10T00:00Z
+    val df = spark.range(20000).select(
+      (lit(day) + col("id") * 1000L).as("mid"), col("id").as("rid"),
+      lit("error").as("level"), ((col("id") * 2654435761L) % 10007L / 97.0).as("value"))
+    val e = new SeqEngine(DocsTable(df, SeqMapping.of("level" -> IndexType.Keyword)))
+    val big = agg.copy(groupBy = Some("level"))
+    val (from, to) = (day, day + 86399999L)
+    val viaFetch = e.aggregateOver(e.matches("level:error", from, to), big).collect().toSeq
+    val viaAggregate = e.aggregate("level:error", from, to, big).collect().toSeq
+    assert(viaAggregate.size == 2)
+    assert(viaFetch == viaAggregate)
   }
 }

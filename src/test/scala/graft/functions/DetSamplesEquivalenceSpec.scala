@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.ColumnBridge
 
 /** The untyped [[DetSamplesAggregate]] (the hash-aggregate path the
-  * engine's quantile sketch runs, SeqEngine sketchQuantileFromFrame)
+  * engine's one quantile path runs, SeqEngine.aggregateOver)
   * wraps [[SeqAggregates.DetOps]], but adds its own
   * serialize/deserialize, and the engine recovers q from position via
   * posexplode + element_at. This spec makes the equivalence a proven
@@ -130,13 +130,19 @@ class DetSamplesEquivalenceSpec extends SparkSpec {
     import graft.engine.{AggFunc, AggRequest, SeqEngine}
     import graft.tables.TestTables
     val engine = new SeqEngine(TestTables.eventsDocs(spark, sfDir))
-    val agg = AggRequest(AggFunc.Quantile(Seq(0.9, 0.5)),
+    val unsorted = Seq(0.9, 0.5)
+    val agg = AggRequest(AggFunc.Quantile(unsorted),
       field = "value", groupBy = Some("event_type"))
     val (t0, t31) = (1704067200000L, 1706745599999L)
-    val exact = engine.aggregateOver(engine.matches("*", t0, t31), agg)
+    val exact = ReferenceForms.windowRankQuantiles(
+      engine.matches("*", t0, t31).select(
+        coalesce(col("event_type").cast("string"), lit("_not_exists")).as("name"),
+        col("value").cast("double").as("v")),
+      Seq("name"), unsorted)
       .collect().toSeq
-    val sketch = engine.aggregateQuantileSketch("*", t0, t31, agg)
+    val sketch = engine.aggregate("*", t0, t31, agg)
       .collect().toSeq
+    assert(sketch.nonEmpty)
     assert(sketch == exact)
   }
 }

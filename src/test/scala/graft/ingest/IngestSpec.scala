@@ -125,52 +125,6 @@ class IngestSpec extends SparkSpec {
     assert(pruned.count() == 1)
   }
 
-  test("streaming ingest maintains bloom sidecars across batches and compaction") {
-    import spark.implicits._
-    import graft.index.TokenBloomIndex
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[String]
-    val out = java.nio.file.Files.createTempDirectory("stream_bloom").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("stream_bloom_ckpt").toString
-    val q = StreamingIngest.start(mem.toDF(), mapping, out, ckpt,
-      requestTimeMs = Some(reqTime), triggerMs = 50, bloomFields = Seq("level"),
-      zoneCols = Seq("mid"))
-    try {
-      mem.addData("""{"timestamp":"2024-03-10 10:00:00","level":"alpha"}""")
-      q.processAllAvailable()
-      mem.addData("""{"timestamp":"2024-03-10 10:01:00","level":"beta"}""")
-      q.processAllAvailable()
-      // every streamed file is indexed; a probe for 'beta' prunes the
-      // alpha-only file (keyword folding: mapping is case-insensitive)
-      val all = spark.read.parquet(out).inputFiles.toSet
-      val cand = TokenBloomIndex.candidateFiles(spark, out, Map("level" -> Seq("beta"))).get
-      assert(cand.toSet.subsetOf(all) && cand.size < all.size)
-      val hit = TokenBloomIndex.prunedRead(spark, out, "level:beta", mapping)
-        .where(col("level") === "beta").count()
-      assert(hit == 1)
-      // the zone-map sidecar tracks the same batches: a mid probe for
-      // the second minute prunes the first-minute file
-      val beta10h01 = 1710064860000L // 2024-03-10T10:01:00Z
-      val zcand = graft.index.ZoneMapIndex.candidateFiles(spark, out,
-        Map("mid" -> ((Some(beta10h01), None: Option[Long])))).get
-      assert(zcand.toSet.subsetOf(all) && zcand.size < all.size)
-      // compaction replaces the day's files; the update indexes them
-      StreamingIngest.compactDay(spark, out, "2024-03-10",
-        bloomFields = Seq("level"), mapping = Some(mapping),
-        zoneCols = Seq("mid"))
-      val cand2 = TokenBloomIndex.candidateFiles(spark, out, Map("level" -> Seq("beta"))).get
-      assert(cand2.toSet.subsetOf(spark.read.parquet(out).inputFiles.toSet))
-      assert(TokenBloomIndex.prunedRead(spark, out, "level:beta", mapping)
-        .where(col("level") === "beta").count() == 1)
-      val zcand2 = graft.index.ZoneMapIndex.candidateFiles(spark, out,
-        Map("mid" -> ((Some(beta10h01), None: Option[Long])))).get
-      assert(zcand2.toSet.subsetOf(spark.read.parquet(out).inputFiles.toSet))
-      assert(graft.index.ZoneMapIndex.prunedRead(spark, out,
-          Map("mid" -> ((Some(beta10h01), None: Option[Long]))))
-        .where(col("mid") >= beta10h01).count() == 1)
-    } finally q.stop()
-  }
-
   test("streaming ingest: micro-batch append, immediate visibility, compaction") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext

@@ -1,6 +1,6 @@
 package graft.server
 
-import org.apache.spark.sql.functions.{col, timestamp_millis, to_date}
+import org.apache.spark.sql.functions.{col, lit, timestamp_millis, to_date}
 
 import graft.SparkSpec
 import graft.engine.DocsTable
@@ -408,6 +408,36 @@ class GrpcSeqApiSpec extends SparkSpec {
     // explain flag on the query survives the wire
     val qe = SearchQuery("x", 0L, 1L, explain = true)
     assert(rt(writeSearchQuery, readSearchQuery, qe) == qe)
+  }
+
+  test("async fetch quantiles equal GetAggregation above the sample cap") {
+    // one bucket of 20 000 values, above the 8096-value sample cap:
+    // the async fetch aggregates its persisted match set and must answer
+    // exactly what GetAggregation answers for the same query
+    val day = 1710028800000L // 2024-03-10T00:00Z
+    val df = spark.range(20000).select(
+      (lit(day) + col("id") * 1000L).as("mid"),
+      col("id").as("rid"), lit("error").as("level"),
+      ((col("id") * 2654435761L) % 10007L / 97.0).as("value"))
+    val asyncDir = java.nio.file.Files.createTempDirectory("grpc_quantile").toString
+    val api = new GrpcSeqApi(spark, DocsTable(df, mapping), asyncDir)
+    val client = new GrpcSeqClient("127.0.0.1", api.start(), api)
+    try {
+      val q = SearchQuery("level:error", day, day + 86399999L)
+      val aggs = Seq(PAggQuery("value", "level", func = 5, Seq(0.5, 0.9), ""))
+      val direct = client.getAggregation(PGetAggregationRequest(q, aggs)).aggs
+      assert(direct.head.buckets.map(_.quantiles.size) == Seq(2), direct)
+      val id = client.startAsync(PStartAsyncRequest(q, asc = false, aggs = aggs)).searchId
+      val deadline = System.currentTimeMillis() + 60000
+      while (!client.fetchAsync(PFetchAsyncRequest(id, withDocs = false, 0, 0)).done &&
+          System.currentTimeMillis() < deadline) Thread.sleep(200)
+      val fetched = client.fetchAsync(PFetchAsyncRequest(id, withDocs = false, 0, 0))
+      assert(fetched.done)
+      assert(fetched.resp.aggs == direct)
+    } finally {
+      client.close()
+      api.stop()
+    }
   }
 
   test("async search: progress survives a store restart (killed between Start and Fetch)") {

@@ -27,62 +27,75 @@ class ServingReloadSpec extends SparkSpec {
   }
 
   test("mapping hot-reload: a field added to the file becomes ingestable and searchable without restart") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_reload")
-    val mappingFile = dir.resolve("mapping.yaml")
-    def writeMapping(extra: String): Unit =
-      java.nio.file.Files.writeString(mappingFile,
-        s"""mapping-list:
-           |  - name: service
-           |    type: keyword
-           |  - name: level
-           |    type: keyword
-           |  - name: message
-           |    type: text
-           |$extra""".stripMargin)
-    writeMapping("")
-    val sink = dir.toString + "/docs"
-    val srv = new EsHttpFacade(spark, SeqMapping.loadYaml(mappingFile.toString),
-      sink, serving = true, mappingPath = Some(mappingFile.toString))
-    srv.start()
-    try {
-      val ts = java.time.Instant.ofEpochMilli(System.currentTimeMillis()).toString
-      def bulk(json: String): Unit = {
-        val r = client.send(HttpRequest.newBuilder(
-            URI.create(s"http://127.0.0.1:${srv.port}/_bulk"))
-          .POST(HttpRequest.BodyPublishers.ofString(json + "\n")).build(),
-          HttpResponse.BodyHandlers.ofString())
-        assert(r.statusCode() == 200, r.body())
-      }
-      bulk(s"""{"timestamp":"$ts","service":"api","level":"error","message":"one"}""")
-      assert(searchBody(srv.port, "level:error")._2.contains("\"total\":1"))
-      // `region` is not in the mapping yet: the unindexed-field
-      // rejection (F11) must fire through the live server
-      val (preCode, preBody) = searchBody(srv.port, "region:eu")
-      assert(preCode == 500 && preBody.contains("not indexed"), s"$preCode $preBody")
-
-      writeMapping(
-        """  - name: region
-          |    type: keyword""".stripMargin)
-      Thread.sleep(1100) // the generation probe's staleness bound
-      // a NEW doc carrying the new field is projected under the
-      // reloaded mapping and immediately searchable by it
-      bulk(s"""{"timestamp":"$ts","service":"api","level":"error","message":"two","region":"eu"}""")
-      val (code, bodyS) = searchBody(srv.port, "region:eu")
-      assert(code == 200 && bodyS.contains("\"total\":1"), s"$code $bodyS")
-
-      // same reloaded mapping through the gRPC server sharing the core
-      val gapi = new grpc.GrpcSeqApi(spark, srv.table,
-        dir.toString + "/_async", serving = Some(srv.core))
-      val gport = gapi.start()
-      val gclient = new grpc.GrpcSeqClient("127.0.0.1", gport, gapi)
+    // both modes share ServingCore's reload: a corrupt edit after a good
+    // one keeps the last mapping that parsed, not the constructor's
+    for (serving <- Seq(true, false)) {
+      val dir = java.nio.file.Files.createTempDirectory("graft_reload")
+      val mappingFile = dir.resolve("mapping.yaml")
+      def writeMapping(extra: String): Unit =
+        java.nio.file.Files.writeString(mappingFile,
+          s"""mapping-list:
+             |  - name: service
+             |    type: keyword
+             |  - name: level
+             |    type: keyword
+             |  - name: message
+             |    type: text
+             |$extra""".stripMargin)
+      writeMapping("")
+      val sink = dir.toString + "/docs"
+      val srv = new EsHttpFacade(spark, SeqMapping.loadYaml(mappingFile.toString),
+        sink, serving = serving, mappingPath = Some(mappingFile.toString))
+      srv.start()
       try {
-        import grpc.SeqProxyProto._
-        val sr = gclient.search(PSearchRequest(
-          SearchQuery("region:eu", 0L, Long.MaxValue),
-          size = 10, offset = 0, withTotal = true, asc = false))
-        assert(sr.total == 1, sr)
-      } finally { gclient.close(); gapi.stop() }
-    } finally srv.stop()
+        val ts = java.time.Instant.ofEpochMilli(System.currentTimeMillis()).toString
+        def bulk(json: String): Unit = {
+          val r = client.send(HttpRequest.newBuilder(
+              URI.create(s"http://127.0.0.1:${srv.port}/_bulk"))
+            .POST(HttpRequest.BodyPublishers.ofString(json + "\n")).build(),
+            HttpResponse.BodyHandlers.ofString())
+          assert(r.statusCode() == 200, r.body())
+        }
+        bulk(s"""{"timestamp":"$ts","service":"api","level":"error","message":"one"}""")
+        assert(searchBody(srv.port, "level:error")._2.contains("\"total\":1"), serving)
+        // `region` is not in the mapping yet: the unindexed-field
+        // rejection (F11) must fire through the live server
+        val (preCode, preBody) = searchBody(srv.port, "region:eu")
+        assert(preCode == 500 && preBody.contains("not indexed"), s"$serving $preCode $preBody")
+
+        val region = """  - name: region
+          |    type: keyword""".stripMargin
+        writeMapping(region)
+        Thread.sleep(1100) // the generation probe's staleness bound
+        // a NEW doc carrying the new field is projected under the
+        // reloaded mapping and immediately searchable by it
+        bulk(s"""{"timestamp":"$ts","service":"api","level":"error","message":"two","region":"eu"}""")
+        val (code, bodyS) = searchBody(srv.port, "region:eu")
+        assert(code == 200 && bodyS.contains("\"total\":1"), s"$serving $code $bodyS")
+
+        // same reloaded mapping through the gRPC server sharing the core
+        val gapi = new grpc.GrpcSeqApi(spark, srv.table,
+          dir.toString + "/_async", serving = if (serving) Some(srv.core) else None)
+        val gport = gapi.start()
+        val gclient = new grpc.GrpcSeqClient("127.0.0.1", gport, gapi)
+        try {
+          import grpc.SeqProxyProto._
+          val sr = gclient.search(PSearchRequest(
+            SearchQuery("region:eu", 0L, Long.MaxValue),
+            size = 10, offset = 0, withTotal = true, asc = false))
+          assert(sr.total == 1, s"$serving $sr")
+        } finally { gclient.close(); gapi.stop() }
+
+        // a corrupt edit (unknown index type) keeps the last good
+        // mapping: `region` stays searchable
+        writeMapping(region + """
+          |  - name: broken
+          |    type: no-such-type""".stripMargin)
+        Thread.sleep(1100)
+        val (badCode, badBody) = searchBody(srv.port, "region:eu")
+        assert(badCode == 200 && badBody.contains("\"total\":1"), s"$serving $badCode $badBody")
+      } finally srv.stop()
+    }
   }
 
   test("serving pin byte-cap: a sink above maxPinnedBytes degrades to DISK_ONLY with identical results") {

@@ -16,13 +16,15 @@ ONLY = set()
 for a in sys.argv:
     if a.startswith("--only="):
         ONLY = set(a[len("--only="):].split(","))
+# the checkout this script lives in, so a copy verifies its own code
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
 
 if "--skip-spark" not in sys.argv:
     arg3 = f" {','.join(sorted(ONLY))}" if ONLY else ""
     r = subprocess.run(
         ["sbt", "-batch", f'runMain graft.Verify {SF} {OUT}{arg3}'],
-        cwd="/root/repo", capture_output=True, text=True, timeout=1200)
+        cwd=REPO, capture_output=True, text=True, timeout=1200)
     if r.returncode != 0:
         print(r.stdout[-4000:]); print(r.stderr[-4000:])
         sys.exit(f"Verify failed rc={r.returncode}")

@@ -55,6 +55,8 @@ for a in sys.argv:
         ARTIFACT = a[len("--artifact="):]
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
 TOOLS = os.path.dirname(os.path.abspath(__file__))
+# the checkout this script lives in, so a copy verifies its own code
+REPO = os.path.dirname(TOOLS)
 
 # oracle formulations documented as non-finishing at sf1 -> replay tool
 # (REHEARSAL_r09: dedup_stats brute is 1.25e11 pair predicates; the PQ
@@ -166,7 +168,7 @@ if __name__ == "__main__":
         arg3 = f" {','.join(sorted(ONLY))}" if ONLY else ""
         r = subprocess.run(
             ["sbt", "-batch", f"runMain graft.Verify {SF} {OUT}{arg3}"],
-            cwd="/root/repo", capture_output=True, text=True, timeout=7200)
+            cwd=REPO, capture_output=True, text=True, timeout=7200)
         # Verify catches per-query Spark failures and prints [verify]
         # lines; surface them — a missing output dir fails the compare
         for line in (r.stdout + r.stderr).splitlines():
